@@ -149,19 +149,7 @@ def q_forward_fill(spark, sf_dir):
     return out.select("event_id", "user_id", F.col("v").alias("value_ffill"))
 
 
-def q_asof_join(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    anchors = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    features = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("view_value"))
-    )
-    out = asof_join(anchors, features, entity="user_id", value_cols=["view_value"], suffix="")
-    return out.select("event_id", "user_id", _epoch("ts").alias("ts_s"), "view_value")
-
-
-def _asof_directed_frames(spark, sf_dir):
+def _asof_frames(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     anchors = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
     features = (
@@ -172,17 +160,21 @@ def _asof_directed_frames(spark, sf_dir):
     return anchors, features
 
 
+def q_asof_join(spark, sf_dir):
+    anchors, features = _asof_frames(spark, sf_dir)
+    out = asof_join(anchors, features, entity="user_id", value_cols=["view_value"], suffix="")
+    return out.select("event_id", "user_id", _epoch("ts").alias("ts_s"), "view_value")
+
+
 def q_asof_forward(spark, sf_dir):
-    """Forward as-of (operators/asof.py asof_join_directed): earliest
+    """Forward as-of (operators/asof.py asof_join): earliest
     view at-or-after each click — label construction (time-to-next-
     event style), behind the allow_future=True leak gate. Same single
     union-tag exchange as the backward path; equal timestamps match
     (pandas merge_asof forward parity, tested vs pandas in
     tests/test_asof.py). Oracle: DuckDB native ASOF with <=."""
-    from feature_engineering_tk_spark.operators.asof import asof_join_directed
-
-    anchors, features = _asof_directed_frames(spark, sf_dir)
-    out = asof_join_directed(
+    anchors, features = _asof_frames(spark, sf_dir)
+    out = asof_join(
         anchors, features, entity="user_id", value_cols=["view_value"],
         suffix="", direction="forward", allow_future=True,
     )
@@ -190,15 +182,13 @@ def q_asof_forward(spark, sf_dir):
 
 
 def q_asof_nearest(spark, sf_dir):
-    """Nearest as-of (operators/asof.py asof_join_directed): closest
+    """Nearest as-of (operators/asof.py asof_join): closest
     view in absolute integer-µs distance, BACKWARD winning equidistant
     ties (pandas rule). One exchange, two window sorts, row-local
     pick. Oracle: backward + forward DuckDB ASOF CTEs combined by the
     identical distance rule."""
-    from feature_engineering_tk_spark.operators.asof import asof_join_directed
-
-    anchors, features = _asof_directed_frames(spark, sf_dir)
-    out = asof_join_directed(
+    anchors, features = _asof_frames(spark, sf_dir)
+    out = asof_join(
         anchors, features, entity="user_id", value_cols=["view_value"],
         suffix="", direction="nearest", allow_future=True,
     )
@@ -214,13 +204,7 @@ def q_asof_packed(spark, sf_dir):
     on the value columns. Oracle: DuckDB native ASOF JOIN."""
     from feature_engineering_tk_spark.operators.asof import asof_join_packed
 
-    ev = _t(spark, sf_dir, "events")
-    anchors = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    features = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("view_value"))
-    )
+    anchors, features = _asof_frames(spark, sf_dir)
     out = asof_join_packed(
         anchors, features, entity="user_id", value_cols=["view_value"], suffix=""
     )
@@ -2592,23 +2576,6 @@ def q_context_truncate(spark, sf_dir):
 
     out = context_truncate(_transcript_view(spark, sf_dir), max_tokens=5, keep_first=1)
     return out.select("conv_id", "turn_idx", "n_tokens", "kept")
-
-
-def q_preference_pairs(spark, sf_dir):
-    """DPO preference-pair construction (operators/transcripts.py
-    preference_pairs): per prompt, argmax/argmin-score responses as
-    struct max/min in ONE partial-aggregatable groupBy; smallest-id
-    tie-break; zero-margin prompts dropped. Prompts derived as
-    user_id % 200 over scored events."""
-    from feature_engineering_tk_spark.operators.transcripts import preference_pairs
-
-    ev = _t(spark, sf_dir, "events")
-    responses = ev.where(F.col("value").isNotNull()).select(
-        (F.col("user_id") % 200).alias("prompt_id"),
-        F.col("event_id").alias("response_id"),
-        F.col("value").alias("score"),
-    )
-    return preference_pairs(responses)
 
 
 def q_length_buckets(spark, sf_dir):
@@ -5132,7 +5099,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "missing_select": q_missing_select,
         "corpus_report": q_corpus_report,
         "context_truncate": q_context_truncate,
-        "preference_pairs": q_preference_pairs,
         "length_buckets": q_length_buckets,
         "cohen_kappa": q_cohen_kappa,
         "fleiss_kappa": q_fleiss_kappa,
@@ -8768,31 +8734,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT conv_id, CAST(turn_idx AS INT) AS turn_idx, n_tokens,
                (turn_idx < 1 OR sfx + head_tokens <= 5) AS kept
           FROM wsum
-    """
-    d["preference_pairs"] = """
-        WITH r AS (
-          SELECT user_id % 200 AS prompt_id,
-                 event_id AS response_id,
-                 CAST(value AS DOUBLE) AS score
-            FROM events WHERE value IS NOT NULL
-        ),
-        a AS (
-          SELECT prompt_id, response_id, score,
-                 row_number() OVER (PARTITION BY prompt_id
-                                    ORDER BY score DESC, response_id ASC) AS rc,
-                 row_number() OVER (PARTITION BY prompt_id
-                                    ORDER BY score ASC, response_id ASC) AS rr,
-                 count(*) OVER (PARTITION BY prompt_id) AS n
-            FROM r
-        )
-        SELECT c.prompt_id,
-               CAST(c.response_id AS BIGINT) AS chosen_id,
-               CAST(j.response_id AS BIGINT) AS rejected_id,
-               c.score AS chosen_score,
-               j.score AS rejected_score,
-               c.score - j.score AS margin
-          FROM a c JOIN a j ON c.prompt_id = j.prompt_id
-         WHERE c.rc = 1 AND j.rr = 1 AND c.n >= 2 AND c.score > j.score
     """
     d["length_buckets"] = """
         WITH t AS (

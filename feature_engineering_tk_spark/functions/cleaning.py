@@ -213,9 +213,6 @@ def gopher_rules(
     )
 
 
-_nfc_udf_cache: dict = {}
-
-
 def normalize_unicode(
     df: DataFrame,
     column: str = "text",
@@ -244,22 +241,16 @@ def normalize_unicode(
         c = F.regexp_replace(
             c, "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f\\x{80}-\\x{9f}]", ""
         )
-    if form not in _nfc_udf_cache:
-        import unicodedata
+    import unicodedata
 
-        from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-        def _make(f):
-            @pandas_udf("string")
-            def _norm(s: pd.Series) -> pd.Series:
-                return s.map(
-                    lambda x: unicodedata.normalize(f, x) if x is not None else None
-                )
+    # built per call: a cached UDF keeps its first SparkContext's accumulator
+    @pandas_udf("string")
+    def _norm(s: pd.Series) -> pd.Series:
+        return s.map(lambda x: unicodedata.normalize(form, x) if x is not None else None)
 
-            return _norm
-
-        _nfc_udf_cache[form] = _make(form)
-    return df.withColumn(out or column, _nfc_udf_cache[form](c))
+    return df.withColumn(out or column, _norm(c))
 
 
 def strip_markup(
@@ -451,9 +442,6 @@ def phrase_scan(
     )
 
 
-_zlib_udf_cache: dict = {}
-
-
 def compression_ratio(
     df: DataFrame,
     text_col: str = "text",
@@ -478,24 +466,24 @@ def compression_ratio(
     LIBRARY constant rather than engine algebra, this operator is
     verified by pytest fixtures, not a SQL oracle.
     """
+    import zlib
+
+    from pyspark.sql.functions import pandas_udf
+
     key = int(level)
-    if key not in _zlib_udf_cache:
-        import zlib
 
-        from pyspark.sql.functions import pandas_udf
+    # built per call: a cached UDF keeps its first SparkContext's accumulator
+    @pandas_udf("struct<compressed_bytes:bigint,raw_bytes:bigint>")
+    def _comp(s: pd.Series) -> pd.DataFrame:
+        raw = s.map(lambda x: None if x is None else len(x.encode("utf-8")))
+        comp = s.map(
+            lambda x: None
+            if x is None
+            else len(zlib.compress(x.encode("utf-8"), key))
+        )
+        return pd.DataFrame({"compressed_bytes": comp, "raw_bytes": raw})
 
-        @pandas_udf("struct<compressed_bytes:bigint,raw_bytes:bigint>")
-        def _comp(s: pd.Series) -> pd.DataFrame:
-            raw = s.map(lambda x: None if x is None else len(x.encode("utf-8")))
-            comp = s.map(
-                lambda x: None
-                if x is None
-                else len(zlib.compress(x.encode("utf-8"), key))
-            )
-            return pd.DataFrame({"compressed_bytes": comp, "raw_bytes": raw})
-
-        _zlib_udf_cache[key] = _comp
-    st = _zlib_udf_cache[key](F.col(text_col))
+    st = _comp(F.col(text_col))
     base = df.withColumn("_cz", st)
     return (
         base.withColumn("compressed_bytes", F.col("_cz.compressed_bytes"))

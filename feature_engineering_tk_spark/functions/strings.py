@@ -21,21 +21,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
-_title_udf_cache = None
-
-
 def _title_udf(c):
-    # lazy: pandas_udf construction needs an active SparkSession
-    global _title_udf_cache
-    if _title_udf_cache is None:
+    # built per call: a UDF object keeps the accumulator of the
+    # SparkContext it was first used in, so a cached one fails to
+    # report after that context stops
+    @pandas_udf("string")
+    def title(s: pd.Series) -> pd.Series:
+        # exact pandas .str.title() semantics (Python str.title)
+        return s.str.title()
 
-        @pandas_udf("string")
-        def title(s: pd.Series) -> pd.Series:
-            # exact pandas .str.title() semantics (Python str.title)
-            return s.str.title()
-
-        _title_udf_cache = title
-    return _title_udf_cache(c)
+    return title(c)
 
 
 _OPS: dict[str, callable] = {

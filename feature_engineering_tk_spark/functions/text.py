@@ -90,33 +90,28 @@ def lang_id(df: DataFrame, column: str, threshold: float = 0.05) -> DataFrame:
     )
 
 
-_rolling_hash_cache = None
-
-
 def _rolling_hash_udf(c):
     """Polynomial rolling hash (Rabin-Karp style) of the normalized
     text — deterministic 61-bit fingerprint. Vectorized per Arrow
-    batch. Lazy: pandas_udf construction needs an active session."""
-    global _rolling_hash_cache
-    if _rolling_hash_cache is None:
+    batch. Built per call, like every engine UDF: a cached UDF keeps
+    the accumulator of the SparkContext it was first used in."""
 
-        @pandas_udf("bigint")
-        def rolling_hash(s: pd.Series) -> pd.Series:
-            MOD = (1 << 61) - 1
-            BASE = 257
-            out = np.zeros(len(s), dtype=np.int64)
-            for i, txt in enumerate(s):
-                if txt is None:
-                    out[i] = 0
-                    continue
-                h = 0
-                for ch in txt.encode("utf-8"):
-                    h = (h * BASE + ch) % MOD
-                out[i] = h
-            return pd.Series(out)
+    @pandas_udf("bigint")
+    def rolling_hash(s: pd.Series) -> pd.Series:
+        MOD = (1 << 61) - 1
+        BASE = 257
+        out = np.zeros(len(s), dtype=np.int64)
+        for i, txt in enumerate(s):
+            if txt is None:
+                out[i] = 0
+                continue
+            h = 0
+            for ch in txt.encode("utf-8"):
+                h = (h * BASE + ch) % MOD
+            out[i] = h
+        return pd.Series(out)
 
-        _rolling_hash_cache = rolling_hash
-    return _rolling_hash_cache(c)
+    return rolling_hash(c)
 
 
 def fingerprint(df: DataFrame, column: str, out: str = "fingerprint") -> DataFrame:

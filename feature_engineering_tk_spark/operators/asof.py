@@ -1,34 +1,72 @@
 """Point-in-time (as-of) join — the engine's core join operator.
 
-Spark has no native as-of join; two implementations with different
-scale profiles:
+Spark has no native as-of join. Three algorithms share ONE semantics
+(pandas ``merge_asof``, whole-row):
 
-- :func:`asof_join` — sorted-merge shaped union-tag algorithm: ONE
-  shuffle of (left ∪ right) on the entity key, one window sort, no
-  row explosion. This is the 100 TB path: cost is a single exchange +
-  sort per side, identical to what a native sort-merge as-of join would
-  do, and AQE skew handling applies to the exchange.
-- :func:`asof_join_broadcast` — for small right sides (fitted state,
-  snapshot statistics): broadcast hash join on the entity key, then a
-  window picks the latest right row per left anchor. Row explosion is
-  bounded by rows-per-entity on the right, so only use when the right
-  side is genuinely small.
+- :func:`asof_join` — union-tag: ONE shuffle of (left ∪ right) on the
+  entity key, one window sort per direction, no row explosion. Each
+  right row travels as one struct ``(key, values…)``; a running
+  ``max`` over right rows only carries the whole matching row onto
+  every left anchor. Directions ``'backward'`` (default),
+  ``'forward'`` and ``'nearest'``.
+- :func:`asof_join_packed` — the pipeline path: the right side packs
+  to one sorted array per entity and joins on the entity key, so a
+  pre-partitioned left side is never re-shuffled. Backward only.
+- :func:`asof_join_broadcast` — small right sides: broadcast join on
+  the entity key, then the greatest matching row per anchor.
+  Backward only, no tolerance.
 
-Tie semantics (north-rule hard part): ``right.ts == left.ts`` IS
-matched (``<=``, not ``<``) — the union sorts right rows before left
-anchors at equal timestamps via a tag column. The point-in-time
-default is direction 'backward' only; :func:`asof_join_directed`
-adds pandas ``merge_asof`` 'forward'/'nearest' parity behind the
-explicit ``allow_future=True`` leak gate (label construction, not
-features).
+The contract all three keep:
+
+- ``right.ts == left.ts`` IS matched (``<=`` backward, ``>=``
+  forward).
+- A match is a whole right row: a null value in the matched row stays
+  null, it is never filled from an older row.
+- Among right rows sharing ``(entity, ts)`` the row greatest in
+  ``(ts, values…)`` order wins (Spark struct ordering, nulls first).
+- NULL entities match NULL entities; entities absent from the right
+  side get nulls.
+- ``tolerance_seconds`` is compared in integer µs (two ~1.7e9
+  epoch-second doubles lose ~2.4e-7 s to cancellation, enough to flip
+  a match exactly at the boundary).
+
+``'forward'`` and ``'nearest'`` read rows after the anchor, so they sit
+behind ``allow_future=True``. They read the future through a
+DESCENDING-ordered window whose frame still ends at the current row: a
+plan-level leak audit has to check sort direction, not only frame
+bounds.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from feature_engineering_tk_spark.functions.timeutil import epoch_micros, epoch_seconds
+from feature_engineering_tk_spark.functions.timeutil import epoch_micros
+from feature_engineering_tk_spark.operators.window_features import FutureLeakError
+
+# the struct carries each direction needs: "_b" (backward), "_f" (forward)
+_DIRECTIONS = {"backward": ("_b",), "forward": ("_f",), "nearest": ("_b", "_f")}
+
+
+def _default_values(right: DataFrame, entity: str, right_ts: str) -> list[str]:
+    return [c for c in right.columns if c not in (entity, right_ts)]
+
+
+def _row(key: Column, value_cols: list[str]) -> Column:
+    """A right row as one struct ``(_k, values…)``. Struct ordering
+    (field by field, nulls first) is the tie rule: the greatest row
+    wins."""
+    return F.struct(key.alias("_k"), *[F.col(c) for c in value_cols])
+
+
+def _within(dist: Column, tolerance_seconds: float | None) -> Column:
+    """``dist`` exists (a row matched, both timestamps non-null) and is
+    within the tolerance, compared in integer µs."""
+    ok = dist.isNotNull()
+    if tolerance_seconds is None:
+        return ok
+    return ok & (dist <= F.lit(int(round(float(tolerance_seconds) * 1_000_000))))
 
 
 def asof_join(
@@ -40,201 +78,87 @@ def asof_join(
     value_cols: list[str] | None = None,
     tolerance_seconds: float | None = None,
     suffix: str = "_asof",
-) -> DataFrame:
-    """Attach, to every left row, the latest right row with
-    ``right.ts <= left.ts`` for the same entity.
-
-    Union-tag algorithm: stack both sides, sort each entity partition by
-    (ts, tag) — right rows (tag 0) before left anchors (tag 1) at equal
-    ts — then ``last(value, ignorenulls=True)`` over an unbounded-
-    preceding frame carries the most recent right value onto each left
-    anchor. One shuffle, no row explosion, no driver round-trip.
-
-    If multiple right rows share (entity, ts) the one latest in the
-    (right_ts, input order) sort wins — pre-aggregate the right side if
-    a specific tie-break is required.
-
-    ``tolerance_seconds``: matches older than the tolerance are nulled
-    (pandas ``merge_asof(tolerance=...)`` parity). Timestamps are
-    carried as integer epoch-microseconds and the tolerance compared in
-    integer µs — subtracting two ~1.7e9 epoch-second doubles loses
-    ~2.4e-7 s to cancellation, enough to flip a match exactly at the
-    tolerance boundary.
-    """
-    value_cols = value_cols or [
-        c for c in right.columns if c not in (entity, right_ts)
-    ]
-    left_cols = left.columns
-
-    l_tag = left.select(
-        F.col(entity).alias("_e"),
-        epoch_micros(F.col(left_ts)).alias("_t"),
-        F.lit(1).alias("_tag"),
-        *[F.col(c) for c in left_cols],
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"_rv_{c}") for c in value_cols],
-        F.lit(None).cast("long").alias("_rt"),
-    )
-    r_tag = right.select(
-        F.col(entity).alias("_e"),
-        epoch_micros(F.col(right_ts)).alias("_t"),
-        F.lit(0).alias("_tag"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_cols],
-        *[F.col(c).alias(f"_rv_{c}") for c in value_cols],
-        epoch_micros(F.col(right_ts)).alias("_rt"),
-    )
-
-    unioned = l_tag.unionByName(r_tag)
-    w = (
-        Window.partitionBy("_e")
-        .orderBy("_t", "_tag")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    carried = unioned.withColumns(
-        {f"_c_{c}": F.last(f"_rv_{c}", ignorenulls=True).over(w) for c in value_cols}
-        | {"_c_rt": F.last("_rt", ignorenulls=True).over(w)}
-    )
-    out = carried.filter(F.col("_tag") == 1)
-
-    if tolerance_seconds is not None:
-        tolerance_us = int(round(float(tolerance_seconds) * 1_000_000))
-        in_tol = (F.col("_t") - F.col("_c_rt")) <= F.lit(tolerance_us)
-        sel = [
-            F.when(in_tol, F.col(f"_c_{c}")).otherwise(F.lit(None)).alias(f"{c}{suffix}")
-            for c in value_cols
-        ]
-    else:
-        sel = [F.col(f"_c_{c}").alias(f"{c}{suffix}") for c in value_cols]
-
-    return out.select(*[F.col(c) for c in left_cols], *sel)
-
-
-def asof_join_directed(
-    left: DataFrame,
-    right: DataFrame,
-    entity: str = "conv_id",
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    value_cols: list[str] | None = None,
-    tolerance_seconds: float | None = None,
-    suffix: str = "_asof",
     direction: str = "backward",
     allow_future: bool = False,
 ) -> DataFrame:
-    """As-of join with pandas ``merge_asof`` direction parity:
-    ``'backward'`` (delegates to :func:`asof_join`), ``'forward'``
-    (earliest right row with ``right.ts >= left.ts``), ``'nearest'``
-    (closest in absolute integer-µs distance; the BACKWARD row wins
-    equidistant ties, pandas rule).
+    """Attach to every left row the right row of the same entity that
+    pandas ``merge_asof(direction=...)`` would pick, as
+    ``<value><suffix>`` columns.
 
-    ``'forward'`` and ``'nearest'`` read rows later than the anchor —
-    label construction (next tool result, time-to-next-purchase), not
-    features — so they require the explicit ``allow_future=True``
-    opt-in, same contract as ``with_lead``/``backward_fill``. The
-    point-in-time pipeline default stays leak-proof.
+    - ``'backward'``: latest right row with ``right.ts <= left.ts``.
+    - ``'forward'``: earliest right row with ``right.ts >= left.ts``.
+    - ``'nearest'``: closest in absolute µs; the backward row wins
+      equidistant ties.
 
-    Scale shape: the same single union-tag exchange as
-    :func:`asof_join`; ``'forward'`` is one window sort (ties ordered
-    left-anchor-before-right so equal timestamps match, mirroring the
-    backward tag order), ``'nearest'`` is two sorts over the ONE
-    exchange (backward + forward carries, then a row-local pick).
-    ``tolerance_seconds`` bounds the match distance per direction in
-    integer µs, exactly as in :func:`asof_join`.
+    Union-tag algorithm: stack both sides, left rows carrying a NULL
+    struct and right rows ``struct(key, values…)``. Backward is
+    ``max(struct(rt, values…))`` over ``partitionBy(entity).orderBy(ts,
+    tag)`` up to the current row; forward is the same carry with key
+    ``-rt`` over ``orderBy(desc(ts), tag)``; nearest runs both over the
+    one exchange and picks per row.
+
+    ``'forward'`` and ``'nearest'`` are label construction (next tool
+    result, time-to-next-event), not features, so they require
+    ``allow_future=True`` — the same contract as
+    ``with_lead``/``backward_fill``.
     """
-    if direction == "backward":
-        return asof_join(
-            left, right, entity, left_ts, right_ts, value_cols,
-            tolerance_seconds, suffix,
-        )
-    if direction not in ("forward", "nearest"):
-        raise ValueError(
-            f"direction must be backward/forward/nearest, got {direction!r}"
-        )
-    if not allow_future:
-        from feature_engineering_tk_spark.operators.window_features import (
-            FutureLeakError,
-        )
-
+    if direction not in _DIRECTIONS:
+        raise ValueError(f"direction must be backward/forward/nearest, got {direction!r}")
+    if direction != "backward" and not allow_future:
         raise FutureLeakError(
-            f"asof_join_directed(direction={direction!r}) reads rows after "
-            "the anchor timestamp; pass allow_future=True"
+            f"asof_join(direction={direction!r}) reads rows after the anchor "
+            "timestamp; pass allow_future=True"
         )
-    value_cols = value_cols or [
-        c for c in right.columns if c not in (entity, right_ts)
-    ]
+    value_cols = value_cols or _default_values(right, entity, right_ts)
     left_cols = left.columns
+    carries = _DIRECTIONS[direction]
 
+    rt = epoch_micros(F.col(right_ts))
+    key = {"_b": rt, "_f": -rt}
+    # right rows (tag 0) sort before anchors (tag 1) at equal ts, so a
+    # running max up to the current row includes exact matches
+    order = {"_b": F.col("_t"), "_f": F.col("_t").desc()}
+    r_tag = right.select(
+        F.col(entity).alias("_e"),
+        rt.alias("_t"),
+        F.lit(0).alias("_tag"),
+        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_cols],
+        *[_row(key[k], value_cols).alias(k) for k in carries],
+    )
     l_tag = left.select(
         F.col(entity).alias("_e"),
         epoch_micros(F.col(left_ts)).alias("_t"),
         F.lit(1).alias("_tag"),
         *[F.col(c) for c in left_cols],
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"_rv_{c}") for c in value_cols],
-        F.lit(None).cast("long").alias("_rt"),
+        *[F.lit(None).cast(r_tag.schema[k].dataType).alias(k) for k in carries],
     )
-    r_tag = right.select(
-        F.col(entity).alias("_e"),
-        epoch_micros(F.col(right_ts)).alias("_t"),
-        F.lit(0).alias("_tag"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_cols],
-        *[F.col(c).alias(f"_rv_{c}") for c in value_cols],
-        epoch_micros(F.col(right_ts)).alias("_rt"),
-    )
-    unioned = l_tag.unionByName(r_tag)
-    tol_us = (
-        None
-        if tolerance_seconds is None
-        else int(round(float(tolerance_seconds) * 1_000_000))
-    )
-
-    # forward sort: at equal ts the left anchor (tag 1) precedes right
-    # rows (tag 0), so the (currentRow, unboundedFollowing) frame below
-    # includes exact-timestamp matches — mirror image of the backward
-    # tag order
-    w_f = (
-        Window.partitionBy("_e")
-        .orderBy("_t", F.desc("_tag"))
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
-    carries = {
-        f"_f_{c}": F.first(f"_rv_{c}", ignorenulls=True).over(w_f)
-        for c in value_cols
-    } | {"_f_rt": F.first("_rt", ignorenulls=True).over(w_f)}
-    if direction == "nearest":
-        w_b = (
-            Window.partitionBy("_e")
-            .orderBy("_t", "_tag")
-            .rowsBetween(Window.unboundedPreceding, 0)
+    part = Window.partitionBy("_e")
+    out = (
+        l_tag.unionByName(r_tag)
+        .withColumns(
+            {
+                k: F.max(k).over(
+                    part.orderBy(order[k], "_tag").rowsBetween(Window.unboundedPreceding, 0)
+                )
+                for k in carries
+            }
         )
-        carries |= {
-            f"_b_{c}": F.last(f"_rv_{c}", ignorenulls=True).over(w_b)
-            for c in value_cols
-        } | {"_b_rt": F.last("_rt", ignorenulls=True).over(w_b)}
-
-    out = unioned.withColumns(carries).filter(F.col("_tag") == 1)
-
-    d_f = F.col("_f_rt") - F.col("_t")
-    f_ok = F.col("_f_rt").isNotNull() & (
-        F.lit(True) if tol_us is None else (d_f <= F.lit(tol_us))
+        .filter(F.col("_tag") == 1)
     )
-    if direction == "forward":
-        sel = [
-            F.when(f_ok, F.col(f"_f_{c}")).alias(f"{c}{suffix}")
-            for c in value_cols
-        ]
+
+    d_b = F.col("_t") - F.col("_b._k")
+    d_f = -F.col("_f._k") - F.col("_t")
+    if direction == "backward":
+        pick = F.when(_within(d_b, tolerance_seconds), F.col("_b"))
+    elif direction == "forward":
+        pick = F.when(_within(d_f, tolerance_seconds), F.col("_f"))
     else:
-        d_b = F.col("_t") - F.col("_b_rt")
-        b_ok = F.col("_b_rt").isNotNull() & (
-            F.lit(True) if tol_us is None else (d_b <= F.lit(tol_us))
-        )
-        # backward wins equidistant ties (pandas merge_asof rule)
-        choose_b = b_ok & (~f_ok | (d_b <= d_f))
-        sel = [
-            F.when(choose_b, F.col(f"_b_{c}"))
-            .when(f_ok, F.col(f"_f_{c}"))
-            .alias(f"{c}{suffix}")
-            for c in value_cols
-        ]
-    return out.select(*[F.col(c) for c in left_cols], *sel)
+        b_ok, f_ok = _within(d_b, tolerance_seconds), _within(d_f, tolerance_seconds)
+        pick = F.when(b_ok & (~f_ok | (d_b <= d_f)), F.col("_b")).when(f_ok, F.col("_f"))
+    return out.select(
+        *[F.col(c) for c in left_cols],
+        *[pick[c].alias(f"{c}{suffix}") for c in value_cols],
+    )
 
 
 def asof_join_broadcast(
@@ -246,33 +170,33 @@ def asof_join_broadcast(
     value_cols: list[str] | None = None,
     suffix: str = "_asof",
 ) -> DataFrame:
-    """As-of join for SMALL right sides (snapshot stats, vocabularies):
-    broadcast equi-join on entity with ``right.ts <= left.ts``, then
-    ``row_number`` keeps the latest right row per left anchor.
+    """Backward as-of join for SMALL right sides (snapshot stats,
+    vocabularies): broadcast null-safe equi-join on entity with
+    ``right.ts <= left.ts``, then the greatest ``(ts, values…)`` struct
+    per left anchor wins — the :func:`asof_join` rule.
 
     No shuffle of the big left side beyond the window partitioning; the
     right side ships to every executor. Row explosion bounded by
     right-rows-per-entity — keep the right side aggregated.
     """
-    value_cols = value_cols or [c for c in right.columns if c not in (entity, right_ts)]
+    value_cols = value_cols or _default_values(right, entity, right_ts)
     left_cols = left.columns
 
     lid = left.withColumn("_lid", F.monotonically_increasing_id())
     r = right.select(
         F.col(entity).alias("_re"),
-        epoch_micros(F.col(right_ts)).alias("_rt"),
-        *[F.col(c).alias(f"_rv_{c}") for c in value_cols],
+        _row(epoch_micros(F.col(right_ts)), value_cols).alias("_r"),
     )
     joined = lid.join(
         F.broadcast(r),
-        (lid[entity] == r["_re"]) & (r["_rt"] <= epoch_micros(F.col(left_ts))),
+        lid[entity].eqNullSafe(r["_re"]) & (r["_r._k"] <= epoch_micros(F.col(left_ts))),
         "left",
     )
-    w = Window.partitionBy("_lid").orderBy(F.col("_rt").desc_nulls_last())
+    w = Window.partitionBy("_lid").orderBy(F.col("_r").desc_nulls_last())
     picked = joined.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
     return picked.select(
         *[F.col(c) for c in left_cols],
-        *[F.col(f"_rv_{c}").alias(f"{c}{suffix}") for c in value_cols],
+        *[F.col("_r")[c].alias(f"{c}{suffix}") for c in value_cols],
     )
 
 
@@ -286,49 +210,37 @@ def asof_join_packed(
     tolerance_seconds: float | None = None,
     suffix: str = "_asof",
 ) -> DataFrame:
-    """As-of join that NEVER re-shuffles a pre-partitioned left side —
-    the pipeline fast path.
+    """Backward as-of join that NEVER re-shuffles a pre-partitioned left
+    side — the pipeline path. Same semantics as :func:`asof_join`
+    backward: whole-row match, ``<=`` ties, greatest ``(ts, values…)``
+    row wins among equal timestamps, NULL entity matches NULL,
+    tolerance in integer µs.
 
-    :func:`asof_join`'s union-tag plan is optimal for two cold tables,
-    but a union can never reuse an existing partitioning, so dropping
-    it at the end of a window-feature stack re-shuffles the entire
-    feature table a second time (at 10^12 turns, that second exchange
-    IS the job cost — plan-audited: the union path moves ~2.3x the
-    bytes of this one on the benchmark pipeline).
+    :func:`asof_join`'s union plan is best for two cold tables, but a
+    union can never reuse an existing partitioning, so dropping it at
+    the end of a window-feature stack re-shuffles the whole feature
+    table a second time.
 
-    Algorithm: pack the right side to ONE row per entity — a sorted
-    array of (ts, values) structs built by ``groupBy(entity)`` with
-    map-side partial aggregation — then equi-join on the entity key
-    and binary-pick the last packed element with ``ts <= left.ts``
-    (row-local array expressions). The join requires clustering and
-    ordering BY THE ENTITY PREFIX only, which a window-feature left
-    side already satisfies, so Catalyst reuses the existing exchange
-    and sort: the big side moves ZERO additional bytes; only the
-    entity-sized packed table shuffles.
+    Algorithm: pack the right side to ONE row per entity — the
+    ascending-sorted array of ``struct(ts, values…)`` built by
+    ``groupBy(entity)`` with map-side partial aggregation — then
+    equi-join on the entity key and take the last packed element with
+    ``ts <= left.ts`` (row-local array expressions). The join needs
+    clustering by the entity only, which a window-feature left side
+    already has, so Catalyst reuses the existing exchange and sort:
+    the big side moves zero additional bytes.
 
     Contract: right rows per entity must be bounded (tool calls, state
     changes, dimension updates — not another event stream); the packed
     array lives in one aggregation buffer. For dense right sides use
     :func:`asof_join`; for tiny ones :func:`asof_join_broadcast`.
-
-    Tie semantics match :func:`asof_join` (``<=``); when several right
-    rows share (entity, ts) the row greatest in (ts, values) order
-    wins — and unlike the union-tag path, which carries each value
-    column's last non-null independently, this picks WHOLE ROWS
-    (pandas ``merge_asof`` parity). Tolerance in integer µs as in
-    :func:`asof_join`.
     """
-    value_cols = value_cols or [
-        c for c in right.columns if c not in (entity, right_ts)
-    ]
+    value_cols = value_cols or _default_values(right, entity, right_ts)
     left_cols = left.columns
 
     r_sel = right.select(
         F.col(entity).alias("_e"),
-        F.struct(
-            epoch_micros(F.col(right_ts)).alias("_t"),
-            *[F.col(c).alias(f"_v_{c}") for c in value_cols],
-        ).alias("_s"),
+        _row(epoch_micros(F.col(right_ts)), value_cols).alias("_s"),
     )
     packed = (
         r_sel.filter(F.col("_e").isNotNull())
@@ -359,15 +271,14 @@ def asof_join_packed(
         .drop("_e")
         .join(F.broadcast(packed_null), F.col(entity).isNull(), "left")
     )
-    hits = F.filter(F.coalesce(F.col("_pk"), F.col("_pk0")), lambda s: s["_t"] <= lt)
+    hits = F.filter(F.coalesce(F.col("_pk"), F.col("_pk0")), lambda s: s["_k"] <= lt)
     # ANSI-safe: null when no match / entity absent from the right side
     pick = F.try_element_at(hits, F.lit(-1))
     if tolerance_seconds is not None:
-        tolerance_us = int(round(float(tolerance_seconds) * 1_000_000))
-        pick = F.when((lt - pick["_t"]) <= F.lit(tolerance_us), pick)
+        pick = F.when(_within(lt - pick["_k"], tolerance_seconds), pick)
     return joined.select(
         *[F.col(c) for c in left_cols],
-        *[pick[f"_v_{c}"].alias(f"{c}{suffix}") for c in value_cols],
+        *[pick[c].alias(f"{c}{suffix}") for c in value_cols],
     )
 
 

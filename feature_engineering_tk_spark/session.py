@@ -1,8 +1,8 @@
 """SparkSession factory with scale-oriented defaults.
 
 Single place where the engine's execution knobs live so that local
-tests, ``bench.py`` and a real ``spark-submit --py-files`` deployment
-all get the same plan-shaping configuration:
+tests, the ``perfbench/run.py`` benchmark and a real ``spark-submit
+--py-files`` deployment all get the same plan-shaping configuration:
 
 - AQE on (runtime coalescing, skew-join splitting) — the backstop for
   skewed ``conv_id`` partitions that static planning can't see.

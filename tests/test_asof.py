@@ -279,11 +279,9 @@ def _oracle_directed(left_pdf, right_pdf, direction, tolerance=None):
 @pytest.mark.parametrize("direction", ["forward", "nearest"])
 @pytest.mark.parametrize("tolerance", [None, 120.0])
 def test_directed_matches_pandas(asof_frames, direction, tolerance):
-    from feature_engineering_tk_spark.operators.asof import asof_join_directed
-
     left, right, left_pdf, right_pdf = asof_frames
     got = _collect(
-        asof_join_directed(
+        asof_join(
             left,
             right,
             value_cols=["tokens"],
@@ -300,22 +298,7 @@ def test_directed_matches_pandas(asof_frames, direction, tolerance):
     )
 
 
-def test_directed_backward_delegates(asof_frames):
-    from feature_engineering_tk_spark.operators.asof import asof_join_directed
-
-    left, right, left_pdf, right_pdf = asof_frames
-    got = _collect(asof_join_directed(left, right, value_cols=["tokens"]))
-    exp = _oracle(left_pdf, right_pdf)
-    assert np.array_equal(
-        got["tokens_asof"].to_numpy(dtype=float),
-        exp["tokens_asof"].to_numpy(dtype=float),
-        equal_nan=True,
-    )
-
-
 def test_directed_nearest_tie_prefers_backward(spark):
-    from feature_engineering_tk_spark.operators.asof import asof_join_directed
-
     left = spark.createDataFrame(
         [("c1", 0, pd.Timestamp("2026-01-01 00:00:10").to_pydatetime())],
         "conv_id string, turn_idx int, ts timestamp",
@@ -327,7 +310,7 @@ def test_directed_nearest_tie_prefers_backward(spark):
         ],
         "conv_id string, ts timestamp, v double",
     )
-    got = asof_join_directed(
+    got = asof_join(
         left, right, value_cols=["v"], direction="nearest", allow_future=True
     ).collect()
     assert got[0]["v_asof"] == 1.0  # equidistant -> backward wins
@@ -335,14 +318,13 @@ def test_directed_nearest_tie_prefers_backward(spark):
 
 def test_directed_requires_future_opt_in(asof_frames):
     from feature_engineering_tk_spark.operators.window_features import FutureLeakError
-    from feature_engineering_tk_spark.operators.asof import asof_join_directed
 
     left, right, _, _ = asof_frames
     for d in ("forward", "nearest"):
         with pytest.raises(FutureLeakError, match="allow_future"):
-            asof_join_directed(left, right, direction=d)
+            asof_join(left, right, direction=d)
     with pytest.raises(ValueError, match="direction"):
-        asof_join_directed(left, right, direction="sideways", allow_future=True)
+        asof_join(left, right, direction="sideways", allow_future=True)
 
 
 def test_directed_single_exchange(asof_frames):
@@ -350,11 +332,9 @@ def test_directed_single_exchange(asof_frames):
     class as the backward union-tag path."""
     import re
 
-    from feature_engineering_tk_spark.operators.asof import asof_join_directed
-
     left, right, _, _ = asof_frames
     plan = (
-        asof_join_directed(
+        asof_join(
             left, right, value_cols=["tokens"], direction="nearest",
             allow_future=True,
         )

@@ -64,6 +64,41 @@ def test_title_case_pandas_parity(messy):
     assert out.tolist() == exp.tolist()
 
 
+_RESTART_SCRIPT = """
+import json
+from feature_engineering_tk_spark.functions.strings import clean_strings
+from feature_engineering_tk_spark.session import get_spark
+
+runs = []
+for _ in range(2):
+    spark = get_spark(master="local[1]", shuffle_partitions=1)
+    df = spark.createDataFrame([(0, "a-b c"), (1, "o'neil x2y")], "i int, s string")
+    runs.append([r.s for r in clean_strings(df, ["s"], ["title"]).orderBy("i").collect()])
+    spark.stop()
+print(json.dumps(runs))
+"""
+
+
+def test_title_udf_survives_context_restart(tmp_path):
+    """The title UDF runs in a second SparkContext after the first one
+    stops, and no task fails to report its accumulator update."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = os.environ | {"PYTHONPATH": repo}
+    proc = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT],
+        capture_output=True, text=True, env=env, cwd=tmp_path, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    expected = pd.Series(["a-b c", "o'neil x2y"]).str.title().tolist()
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == [expected, expected]
+    assert "Failed to update accumulator" not in proc.stderr
+
+
 def test_remove_digits(messy):
     df, pdf = messy
     out = clean_strings(df, ["s"], ["remove_digits"]).toPandas().sort_values("i")["s"]

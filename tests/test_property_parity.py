@@ -13,7 +13,7 @@ import math
 import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 SET = settings(
@@ -173,68 +173,114 @@ def test_label_encode_rank_parity(spark, cats):
     assert got == [vocab[c] for c in cats]
 
 
-@given(
-    left_ts=st.lists(st.integers(0, 1000), min_size=1, max_size=25),
-    right_ts=st.lists(st.integers(0, 1000), min_size=1, max_size=25),
-    tol=st.one_of(st.none(), st.integers(1, 200)),
-)
-@SET
-def test_asof_join_matches_pandas_merge_asof(spark, left_ts, right_ts, tol):
-    """Engine as-of join == pandas.merge_asof (backward, inclusive <=,
-    optional tolerance) on arbitrary timestamp multisets — including
-    exact-tie anchors and all-misses."""
-    import pandas as pd
+_ASOF_BASE_US = 1_900_000_000_000_000  # year-2030 epoch µs
 
-    from feature_engineering_tk_spark.operators.asof import asof_join
 
-    left = pd.DataFrame(
-        {
-            "conv_id": ["e"] * len(left_ts),
-            "aid": range(len(left_ts)),
-            "ts": pd.to_datetime(sorted(left_ts), unit="s"),
-        }
-    )
-    # dedupe right timestamps: merge_asof picks the LAST among equal-ts
-    # right rows; the engine's union-tag window does too, but value
-    # disambiguation on exact right-side ts duplicates is undefined in
-    # both — give right unique ts to keep the oracle exact
-    rts = sorted(set(right_ts))
-    right = pd.DataFrame(
-        {
-            "conv_id": ["e"] * len(rts),
-            "ts": pd.to_datetime(rts, unit="s"),
-            "val": [float(t) for t in rts],
-        }
-    )
-    expected = pd.merge_asof(
-        left.sort_values("ts"),
-        right.sort_values("ts"),
+def _merge_asof_oracle(left, right, direction, tol_us):
+    """pandas ``merge_asof`` with the engine's tie rule made explicit:
+    among right rows sharing (entity, ts) the greatest (ts, values) row
+    wins, nulls ordered first as in Spark struct ordering. Sorting
+    ascending puts that row last, which is pandas' backward pick; the
+    forward pick is the first and nearest mixes both, so those see only
+    each group's last row."""
+    r = right.sort_values(["ts", "v", "s"], na_position="first", kind="mergesort")
+    if direction != "backward":
+        r = r.drop_duplicates(["conv_id", "ts"], keep="last")
+    out = pd.merge_asof(
+        left.sort_values("ts", kind="mergesort"),
+        r,
         on="ts",
         by="conv_id",
-        direction="backward",
-        tolerance=pd.Timedelta(seconds=tol) if tol else None,
+        direction=direction,
+        allow_exact_matches=True,
+        tolerance=None if tol_us is None else pd.Timedelta(microseconds=tol_us),
+    )
+    return out.sort_values("aid")
+
+
+@given(
+    # "z" never appears on the right; None is a NULL entity on both sides
+    left=st.lists(
+        st.tuples(st.sampled_from(["a", "b", "z", None]), st.integers(0, 40)),
+        min_size=1,
+        max_size=12,
+    ),
+    # few distinct (entity, ts) pairs: duplicates and exact ties are common
+    right=st.lists(
+        st.tuples(
+            st.sampled_from(["a", "b", None]),
+            st.integers(0, 40),
+            st.one_of(st.none(), st.integers(0, 2)),
+            st.one_of(st.none(), st.sampled_from(["x", "y"])),
+        ),
+        min_size=1,
+        max_size=12,
+    ),
+    tol_us=st.one_of(st.none(), st.integers(0, 12)),
+)
+# the latest row's value is NULL: merge_asof keeps it null
+@example(left=[("a", 10)], right=[("a", 5, 1, "x"), ("a", 8, None, "x")], tol_us=None)
+@SET
+def test_asof_join_matches_pandas_merge_asof(spark, left, right, tol_us):
+    """Every as-of implementation == pandas.merge_asof, whole-row:
+    asof_join in all three directions, asof_join_packed and
+    asof_join_broadcast (backward; broadcast takes no tolerance), over
+    nullable values, duplicate and exactly-tied right timestamps,
+    anchors before an entity's first row, entities absent from the
+    right side, NULL entities and integer-µs tolerance edges."""
+    from functools import partial
+
+    from feature_engineering_tk_spark.operators.asof import (
+        asof_join,
+        asof_join_broadcast,
+        asof_join_packed,
     )
 
-    got = (
-        asof_join(
-            spark.createDataFrame(left),
-            spark.createDataFrame(right),
-            entity="conv_id",
-            value_cols=["val"],
-            tolerance_seconds=float(tol) if tol else None,
-            suffix="",
-        )
-        .orderBy("aid")
-        .toPandas()
+    def ts(off):
+        return pd.to_datetime([_ASOF_BASE_US + o for o in off], unit="us")
+
+    left_pdf = pd.DataFrame(
+        {
+            "conv_id": pd.Series([e for e, _ in left], dtype=object),
+            "aid": range(len(left)),
+            "ts": ts([t for _, t in left]),
+        }
     )
-    exp_vals = expected.sort_values("aid")["val"].tolist()
-    got_vals = got["val"].tolist()
-    assert len(exp_vals) == len(got_vals)
-    for g, e in zip(got_vals, exp_vals):
-        if pd.isna(e):
-            assert g is None or pd.isna(g)
-        else:
-            assert g == e
+    right_pdf = pd.DataFrame(
+        {
+            "conv_id": pd.Series([r[0] for r in right], dtype=object),
+            "ts": ts([r[1] for r in right]),
+            "v": pd.Series([r[2] for r in right], dtype="float64"),
+            "s": pd.Series([r[3] for r in right], dtype=object),
+        }
+    )
+    lf = spark.createDataFrame(left_pdf, "conv_id string, aid long, ts timestamp")
+    rf = spark.createDataFrame(right_pdf, "conv_id string, ts timestamp, v double, s string")
+    tol_s = None if tol_us is None else tol_us / 1e6
+
+    # name -> (direction, tolerance it runs with, implementation)
+    runs = {
+        f"asof_join[{d}]": (
+            d,
+            tol_us,
+            partial(asof_join, direction=d, allow_future=True, tolerance_seconds=tol_s),
+        )
+        for d in ("backward", "forward", "nearest")
+    }
+    runs["asof_join_packed"] = (
+        "backward", tol_us, partial(asof_join_packed, tolerance_seconds=tol_s)
+    )
+    runs["asof_join_broadcast"] = ("backward", None, asof_join_broadcast)
+
+    def norm(xs):
+        return [None if pd.isna(x) else x for x in xs]
+
+    for name, (direction, tol, fn) in runs.items():
+        got = fn(lf, rf, entity="conv_id", value_cols=["v", "s"], suffix="")
+        got = got.orderBy("aid").toPandas()
+        exp = _merge_asof_oracle(left_pdf, right_pdf, direction, tol)
+        for c in ("v", "s"):
+            assert norm(got[c]) == norm(exp[c]), f"{name} {c} (tol_us={tol})"
 
 
 @given(
