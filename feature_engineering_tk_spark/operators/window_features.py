@@ -19,7 +19,7 @@ Leakage contract: every helper here builds frames that END AT THE
 CURRENT ROW (``rowsBetween(lo, 0)`` / ``rangeBetween(lo, 0)``) unless
 explicitly marked future-reading (``with_lead``, ``backward_fill``),
 which callers must opt into with ``allow_future=True`` when assembling
-a leakage-free pipeline (see ``plans.pipeline.LeakageGuard``).
+a leakage-free pipeline (see ``plans.pipeline.strict_no_future``).
 """
 
 from __future__ import annotations

@@ -1,49 +1,34 @@
-"""Per-stage metrics: row counts, entity-skew ratio, output bytes.
+"""Per-stage metrics for the lineage journal.
 
 The north rule requires per-partition lineage and metrics (rows, skew
-ratio, shuffle bytes) persisted per stage. ``stage_snapshot`` /
-``stage_delta`` read TRUE per-Spark-stage shuffle read/write bytes,
-input/output bytes and task counts straight from the JVM
-``AppStatusStore`` (no UI, REST endpoint, or listener JAR needed —
-identical on ``local[*]`` and a real cluster master); ``entity_skew``
-measures the shuffle-hash distribution a key will see; ``dir_bytes``
-/ ``partition_stats`` record filesystem lineage of materialized
-stages.
+ratio, shuffle bytes) persisted per stage. ``job_metrics`` reads them
+for the Spark jobs that ran under one job tag, from the JVM status
+tracker and ``AppStatusStore`` (no UI, REST endpoint or listener JAR;
+the same on ``local[*]`` and a cluster master). Jobs of other tags and
+other threads are not counted, and nothing is recomputed: ``rows`` is
+the write's own output-record count and ``skew`` is read from the
+tasks that ran. ``hot_entities`` lists the heaviest keys;
+``dir_bytes`` / ``partition_stats`` record the filesystem lineage of
+materialized stages.
 """
 
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def entity_skew(df: DataFrame, key: str = "conv_id", buckets: int = 256) -> dict:
-    """Skew ratio of the shuffle-hash distribution for ``key``:
-    max/mean rows per hash bucket (1.0 = perfectly even). This is the
-    distribution a ``Window.partitionBy(key)`` or ``groupBy(key)``
-    shuffle will see. One cheap aggregate job."""
-    counts = (
-        df.groupBy(F.pmod(F.hash(F.col(key)), F.lit(buckets)).alias("_b"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.max("n").alias("mx"),
-            F.avg("n").alias("mean"),
-            F.sum("n").alias("total"),
-            F.count(F.lit(1)).alias("nonempty_buckets"),
-        )
-        .first()
-    )
-    if counts["total"] is None or counts["total"] == 0:
-        return {"skew_ratio": 1.0, "rows": 0, "buckets": buckets}
-    return {
-        "skew_ratio": round(counts["mx"] / counts["mean"], 3),
-        "max_bucket_rows": int(counts["mx"]),
-        "rows": int(counts["total"]),
-        "buckets": buckets,
-        "nonempty_buckets": int(counts["nonempty_buckets"]),
-    }
+SETTLE_S = 10.0
+# journal ``exec`` field -> AppStatusStore StageData getter
+EXEC_FIELDS = {
+    "shuffle_read_bytes": "shuffleReadBytes",
+    "shuffle_write_bytes": "shuffleWriteBytes",
+    "input_bytes": "inputBytes",
+    "output_bytes": "outputBytes",
+    "tasks": "numCompleteTasks",
+}
 
 
 def hot_entities(df: DataFrame, key: str = "conv_id", top: int = 10) -> list[dict]:
@@ -90,47 +75,52 @@ def partition_stats(path: str, partition_col: str = "ds") -> list[dict]:
     return out
 
 
-def stage_snapshot(spark) -> dict[int, dict]:
-    """Per-Spark-stage execution metrics (shuffle read/write bytes,
-    input/output bytes, task counts) straight from the JVM
-    ``AppStatusStore`` — no UI or REST endpoint needed, works the same
-    on ``local[*]`` and a real cluster master."""
-    store = spark._jsc.sc().statusStore()
+def job_metrics(spark, tag: str) -> dict:
+    """Metrics of the Spark jobs that ran under job tag ``tag``: ``rows``
+    (output records written), ``skew`` (over the stages that read
+    shuffle data, the largest max/median of shuffle records read per
+    task, median floored at one record; ``None`` if no stage read any —
+    per task, so AQE coalescing can hide a hot key that shares a
+    partition) and ``exec`` (``EXEC_FIELDS`` summed over the stages that
+    ran, plus ``spark_jobs`` and ``spark_stages``).
+
+    The store is filled asynchronously, so first wait (at most
+    ``SETTLE_S``) until it shows each of the tag's jobs as finished,
+    which it does only after recording their stages and tasks.
+    """
+    jsc = spark.sparkContext._jsc.sc()
+    tracker, store = jsc.statusTracker(), jsc.statusStore()
+    deadline = time.monotonic() + SETTLE_S
+    while True:
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForTag(tag)]
+        jobs = [j.get() for j in jobs if j.isDefined()]
+        if time.monotonic() > deadline or all(str(j.status()) != "RUNNING" for j in jobs):
+            break
+        time.sleep(0.01)
+
     gw = spark.sparkContext._gateway
-    stages = store.stageList(
-        gw.jvm.java.util.ArrayList(),
-        False,
-        False,
-        gw.new_array(gw.jvm.double, 0),
-        gw.jvm.java.util.ArrayList(),
-    )
-    out: dict[int, dict] = {}
-    it = stages.iterator()
-    while it.hasNext():
-        st = it.next()
-        out[int(st.stageId())] = {
-            "shuffle_write_bytes": int(st.shuffleWriteBytes()),
-            "shuffle_read_bytes": int(st.shuffleReadBytes()),
-            "input_bytes": int(st.inputBytes()),
-            "output_bytes": int(st.outputBytes()),
-            "tasks": int(st.numCompleteTasks()),
-        }
-    return out
-
-
-def stage_delta(before: dict[int, dict], after: dict[int, dict]) -> dict:
-    """Aggregate metrics of the Spark stages that ran between two
-    :func:`stage_snapshot` calls — what one pipeline stage actually
-    shuffled/read, for the lineage journal."""
-    keys = ("shuffle_write_bytes", "shuffle_read_bytes", "input_bytes", "output_bytes", "tasks")
-    agg = dict.fromkeys(keys, 0)
-    n_stages = 0
-    for sid, m in after.items():
-        prev = before.get(sid, dict.fromkeys(keys, 0))
-        diff = {k: m[k] - prev.get(k, 0) for k in keys}
-        if any(diff.values()):
-            n_stages += 1
-            for k in keys:
-                agg[k] += max(diff[k], 0)
-    agg["spark_stages"] = n_stages
-    return agg
+    quantiles = gw.new_array(gw.jvm.double, 2)
+    quantiles[0], quantiles[1] = 0.5, 1.0
+    exec_ = dict.fromkeys(EXEC_FIELDS, 0)
+    rows, stages, skew = 0, 0, None
+    for sid in sorted({s for j in jobs for s in j.stageIds()}):
+        # a skipped stage never ran; the store evicts those first
+        # (spark.ui.retainedStages), so it may already be gone
+        if not tracker.getStageInfo(sid).isDefined():
+            continue
+        st = store.lastStageAttempt(sid)
+        if str(st.status()) == "SKIPPED":
+            continue
+        stages += 1
+        rows += int(st.outputRecords())
+        for field, getter in EXEC_FIELDS.items():
+            exec_[field] += int(getattr(st, getter)())
+        if st.shuffleReadRecords() > 0:
+            summary = store.taskSummary(sid, st.attemptId(), quantiles)
+            if summary.isDefined():
+                read = summary.get().shuffleReadMetrics().readRecords()
+                ratio = float(read.apply(1)) / max(float(read.apply(0)), 1.0)
+                skew = round(max(skew or 0.0, ratio), 3)
+    exec_["spark_jobs"] = len(jobs)
+    exec_["spark_stages"] = stages
+    return {"rows": rows, "skew": skew, "exec": exec_}

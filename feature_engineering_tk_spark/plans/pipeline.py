@@ -4,15 +4,25 @@ The distributed analog of the reference's mutable-DataFrame-plus-
 operation-history model (``preprocessing.py:61-93``): a ``Pipeline``
 accumulates named stages (pure ``DataFrame -> DataFrame`` functions);
 ``run`` executes them lazily, materializing checkpoint stages as
-date-partitioned parquet, and writes a lineage journal with per-stage
-params, wall time, row counts, entity-skew ratio and per-partition
-file stats (the north rule's per-Iceberg-partition lineage+metrics).
+date-partitioned parquet, and journals each stage to ``lineage.jsonl``
+with params and wall time. Each stage runs under its own Spark job tag
+(thread-local), and its metrics are read from that tag's jobs only
+(``metrics.job_metrics``; other stages' and other threads' jobs are not
+counted, and no extra job runs): ``exec`` (shuffle read/write, input
+and output bytes, tasks, Spark jobs and stages; only when the stage ran
+a job, so lazy stages have none) and ``skew`` (max/median shuffle
+records read per task: AQE coalescing can hide a hot key that shares a
+partition). A checkpoint adds ``rows`` (the write's own output-record
+count), its bytes and per-partition files (the north rule's
+per-Iceberg-partition lineage+metrics).
 
 Resume semantics (determinism hard-part #4): a completed checkpoint is
 an artifact — on re-run, completed stages are NOT recomputed; the
 pipeline reloads the materialized parquet and continues, and fitted
 transform state must be persisted by the stage itself (see
-``transforms.state``) so nothing is ever refit mid-run.
+``transforms.state``) so nothing is ever refit mid-run. A checkpoint is
+reused only if the names and params of it and every stage before it,
+stored in the manifest, match the pipeline; otherwise it is recomputed.
 
 Leakage guard: inside ``strict_no_future()`` every future-reading
 window helper raises even when the caller passes ``allow_future=True``
@@ -25,6 +35,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass, field
@@ -61,17 +72,9 @@ class Stage:
 
 
 class Pipeline:
-    def __init__(
-        self,
-        workdir: str,
-        entity: str = "conv_id",
-        partition_col: str = "ds",
-        collect_metrics: bool = True,
-    ):
+    def __init__(self, workdir: str, partition_col: str = "ds"):
         self.workdir = workdir
-        self.entity = entity
         self.partition_col = partition_col
-        self.collect_metrics = collect_metrics
         self.stages: list[Stage] = []
         os.makedirs(workdir, exist_ok=True)
 
@@ -113,75 +116,78 @@ class Pipeline:
             f.write(json.dumps(record) + "\n")
 
     # -- execution --------------------------------------------------------
-    def _stage_dir(self, stage: Stage) -> str:
-        return os.path.join(self.workdir, f"stage={stage.name}")
+    def _stage_dir(self, name: str) -> str:
+        return os.path.join(self.workdir, f"stage={name}")
 
     def _materialize(self, df: DataFrame, stage: Stage) -> DataFrame:
-        path = self._stage_dir(stage)
-        out = df
+        path = self._stage_dir(stage.name)
         if self.partition_col in df.columns:
             (
-                out.repartition(self.partition_col)
+                df.repartition(self.partition_col)
                 .write.mode("overwrite")
                 .partitionBy(self.partition_col)
                 .parquet(path)
             )
         else:
-            out.write.mode("overwrite").parquet(path)
+            df.write.mode("overwrite").parquet(path)
         return df.sparkSession.read.parquet(path)
 
     def run(self, spark: SparkSession, df: DataFrame, resume: bool = True) -> DataFrame:
         manifest = self._load_manifest() if resume else {"stages": {}}
+        # stage names and params as the manifest stores them (JSON round
+        # trip: tuples compare equal to lists)
+        lineage = json.loads(json.dumps([[s.name, s.params] for s in self.stages]))
 
-        # find the last completed checkpoint → skip everything before it
+        # find the last completed checkpoint built by the same stages and
+        # params → skip everything before it
         start_idx = 0
         cur = df
         for i, stage in enumerate(self.stages):
-            done = manifest["stages"].get(stage.name)
-            if stage.checkpoint and done and done.get("completed"):
+            done = manifest["stages"].get(stage.name) or {}
+            if stage.checkpoint and done.get("lineage") == lineage[: i + 1]:
                 start_idx = i + 1
         if start_idx > 0:
             resumed_from = self.stages[start_idx - 1]
-            cur = spark.read.parquet(self._stage_dir(resumed_from))
-            self._journal(
-                {
-                    "event": "resume",
-                    "from_stage": resumed_from.name,
-                    "ts": time.time(),
-                }
-            )
+            cur = spark.read.parquet(self._stage_dir(resumed_from.name))
+            self._journal({"event": "resume", "from_stage": resumed_from.name, "ts": time.time()})
 
-        for stage in self.stages[start_idx:]:
+        sc = spark.sparkContext
+        for i, stage in enumerate(self.stages[start_idx:], start_idx):
             t0 = time.perf_counter()
-            snap0 = M.stage_snapshot(spark) if self.collect_metrics else {}
-            cur = stage.fn(cur)
             record: dict = {
                 "event": "stage",
                 "stage": stage.name,
                 "params": stage.params,
                 "ts": time.time(),
             }
+            tag = f"fe-pipeline-{stage.name}-{uuid.uuid4().hex}"
+            sc.addJobTag(tag)
+            try:
+                cur = stage.fn(cur)
+                if stage.checkpoint:
+                    cur = self._materialize(cur, stage)
+            finally:
+                sc.removeJobTag(tag)
+            m = M.job_metrics(spark, tag)
+            if m["exec"]["spark_jobs"]:
+                record["exec"] = m["exec"]
+                if m["skew"] is not None:
+                    record["skew"] = m["skew"]
             if stage.checkpoint:
-                cur = self._materialize(cur, stage)
-                record["checkpoint_path"] = self._stage_dir(stage)
-                record["partitions"] = M.partition_stats(
-                    self._stage_dir(stage), self.partition_col
-                )
-                record["bytes"] = M.dir_bytes(self._stage_dir(stage))
+                path = self._stage_dir(stage.name)
+                record |= {
+                    "rows": m["rows"],
+                    "checkpoint_path": path,
+                    "partitions": M.partition_stats(path, self.partition_col),
+                    "bytes": M.dir_bytes(path),
+                }
                 manifest["stages"][stage.name] = {
                     "completed": True,
-                    "path": self._stage_dir(stage),
+                    "path": path,
                     "completed_at": time.time(),
+                    "lineage": lineage[: i + 1],
                 }
                 self._save_manifest(manifest)
-            if self.collect_metrics:
-                if stage.checkpoint or self.collect_metrics == "eager":
-                    record["rows"] = cur.count()
-                    if self.entity in cur.columns:
-                        record["skew"] = M.entity_skew(cur, self.entity)
-                # shuffle bytes actually moved by this stage's Spark jobs
-                # (lazy stages show up in the checkpointing stage's delta)
-                record["exec"] = M.stage_delta(snap0, M.stage_snapshot(spark))
             record["wall_s"] = round(time.perf_counter() - t0, 3)
             self._journal(record)
         return cur
@@ -193,7 +199,7 @@ class Pipeline:
         """Anti-join the input against a completed stage's written
         partitions — the incremental/backfill path: only partitions not
         yet materialized flow through (SURVEY §2.10 semi/anti join)."""
-        path = os.path.join(self.workdir, f"stage={stage_name}")
+        path = self._stage_dir(stage_name)
         done = [p["partition"] for p in M.partition_stats(path, self.partition_col)]
         if not done:
             return input_df

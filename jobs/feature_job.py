@@ -15,9 +15,12 @@ parquet dir or a deterministic synthetic transcript table::
 
 The pipeline is checkpoint-resumable (plans/pipeline.py): every
 checkpointed stage lands as date-partitioned parquet with an atomic
-manifest + lineage journal (rows, skew ratio, bytes per stage); a
-re-run with the same --workdir resumes after the last completed
-checkpoint instead of recomputing.
+manifest, and each stage's lineage record, read from the Spark jobs
+tagged with that stage, goes to ``<workdir>/lineage.jsonl``: ``exec``
+(shuffle/IO bytes, tasks, jobs, stages), per-task shuffle-read
+``skew`` and the checkpoint's written ``rows``. A re-run with the same
+--workdir and stage params (e.g. --gap-seconds) resumes after the last
+completed checkpoint instead of recomputing.
 
 Features per (conv_id, turn_idx, ts) anchor — every window frame ends
 at the current row, so no feature reads a turn with ts greater than
@@ -97,7 +100,7 @@ def build_pipeline(workdir: str, gap_seconds: float):
         out = asof_join(df, tool_calls, entity="conv_id", value_cols=["last_tool"], suffix="")
         return out.withColumn("ds", F.to_date("ts"))
 
-    pipe = Pipeline(workdir, entity="conv_id", partition_col="ds")
+    pipe = Pipeline(workdir, partition_col="ds")
     pipe.add("sessionize", sessionize, {"gap_seconds": gap_seconds})
     pipe.add("lag_features", lag_features)
     pipe.add("rolling_features", rolling_features)

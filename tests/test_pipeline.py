@@ -3,6 +3,7 @@ guard, partition-level anti-join resume, skew metrics, salted agg."""
 
 import json
 import os
+import threading
 
 import numpy as np
 import pytest
@@ -16,7 +17,7 @@ from feature_engineering_tk_spark.plans.pipeline import Pipeline, strict_no_futu
 
 def _mkpipe(tmp_path, tag):
     wd = os.path.join(str(tmp_path), tag)
-    p = Pipeline(workdir=wd, entity="conv_id", partition_col="ds")
+    p = Pipeline(workdir=wd, partition_col="ds")
     p.add("sessionize", lambda df: W.sessionize(df), {"gap_s": 1800})
     p.add("lag", lambda df: W.with_lag(df, "tokens", 1), {"k": 1}, checkpoint=True)
     p.add(
@@ -42,7 +43,7 @@ def test_pipeline_run_and_journal(spark, with_ds, tmp_path):
     ckpt = [l for l in lines if l["stage"] == "lag"][0]
     assert ckpt["partitions"], "per-partition lineage missing"
     assert ckpt["bytes"] > 0
-    assert ckpt["skew"]["rows"] == with_ds.count()
+    assert ckpt["rows"] == with_ds.count()
 
 
 def test_pipeline_resume_skips_completed(spark, with_ds, tmp_path):
@@ -89,17 +90,99 @@ def test_remaining_partitions_anti_join(spark, with_ds, tmp_path):
     assert rem2.count() == 10
 
 
-def test_entity_skew_detects_hot_keys(spark):
+def test_entity_skew_detects_hot_keys(spark, tmp_path):
+    """A hot conversation shows up as per-task shuffle-read skew in the
+    checkpoint's journal record, read from the tasks that ran."""
     import pandas as pd
 
     pdf = pd.DataFrame(
         {"conv_id": ["hot"] * 900 + [f"c{i}" for i in range(100)], "x": range(1000)}
     )
     df = spark.createDataFrame(pdf)
-    m = M.entity_skew(df, "conv_id", buckets=32)
-    assert m["skew_ratio"] > 5
+    pipe = Pipeline(str(tmp_path / "hot"))
+    pipe.add("lag", lambda d: W.with_lag(d, "x", 1, order="x"), checkpoint=True)
+    # AQE would coalesce the tiny shuffle into one task, hiding the skew
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        pipe.run(spark, df, resume=False)
+    finally:
+        spark.conf.set(conf, prev)
+    rec = next(json.loads(l) for l in open(pipe.journal_path))
+    assert rec["rows"] == 1000
+    assert rec["skew"] > 5
     hot = M.hot_entities(df, "conv_id", top=1)
     assert hot[0]["entity"] == "hot" and hot[0]["rows"] == 900
+
+
+def test_journal_isolated_from_concurrent_jobs(spark, transcripts, tmp_path):
+    """Another thread running jobs in the same session must not leak
+    into a stage's journal record: it reads only the stage's own tag."""
+
+    def checkpoint_exec(tag):
+        pipe = Pipeline(str(tmp_path / tag))
+        pipe.add(
+            "feat",
+            lambda df: W.sessionize(df, 1800.0).withColumn("ds", F.to_date("ts")),
+            checkpoint=True,
+        )
+        pipe.run(spark, transcripts, resume=False)
+        return next(json.loads(l) for l in open(pipe.journal_path))["exec"]
+
+    alone = checkpoint_exec("alone")
+    started, stop = threading.Event(), threading.Event()
+
+    def noise():
+        while not stop.is_set():
+            spark.range(0, 20000).groupBy((F.col("id") % 13).alias("k")).count().collect()
+            started.set()
+
+    thread = threading.Thread(target=noise, daemon=True)
+    thread.start()
+    try:
+        assert started.wait(120)
+        busy = checkpoint_exec("busy")
+    finally:
+        stop.set()
+        thread.join(120)
+    assert not thread.is_alive()
+    assert busy == alone
+    assert alone["spark_jobs"] > 0
+
+
+_EVICTION_SCRIPT = """
+import json
+from pyspark.sql import functions as F
+from feature_engineering_tk_spark.operators import window_features as W
+from feature_engineering_tk_spark.plans.pipeline import Pipeline
+from feature_engineering_tk_spark.session import get_spark
+
+spark = get_spark(master="local[2]", shuffle_partitions=2, extra_conf={"spark.ui.retainedStages": "2"})
+df = spark.range(300).select((F.col("id") % 7).alias("conv_id"), F.col("id").alias("x"))
+pipe = Pipeline("work")
+pipe.add("lag", lambda d: W.with_lag(d, "x", 1, order="x"), checkpoint=True)
+for _ in range(3):
+    pipe.run(spark, df, resume=False)
+print(json.dumps([json.loads(line)["rows"] for line in open(pipe.journal_path)]))
+"""
+
+
+def test_journal_survives_stage_eviction(tmp_path):
+    """The status store evicts old stages (skipped ones first) once a
+    long session passes spark.ui.retainedStages; a stage's jobs may list
+    such a stage, and the journal must still be written."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _EVICTION_SCRIPT],
+        capture_output=True, text=True, env=os.environ | {"PYTHONPATH": repo},
+        cwd=tmp_path, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == [300, 300, 300]
 
 
 def test_salted_group_agg_matches_plain(transcripts, transcripts_pdf):
@@ -137,7 +220,7 @@ def test_journal_records_shuffle_bytes(spark, transcripts, tmp_path):
     from feature_engineering_tk_spark.operators import window_features as W
     from feature_engineering_tk_spark.plans.pipeline import Pipeline
 
-    pipe = Pipeline(str(tmp_path / "wd"), entity="conv_id", partition_col="ds")
+    pipe = Pipeline(str(tmp_path / "wd"), partition_col="ds")
     pipe.add("feat", lambda df: W.sessionize(df, 1800.0).withColumn("ds", F.to_date("ts")), checkpoint=True)
     pipe.run(spark, transcripts, resume=False)
 

@@ -87,6 +87,37 @@ def test_feature_job_end_to_end_and_resume(spark, tmp_path):
         assert a.last_tool == latest.tool
 
 
+def test_feature_job_resume_recomputes_changed_params(spark, tmp_path):
+    """A checkpoint built with other stage params is not reused: resuming
+    with a new --gap-seconds recomputes and matches a fresh run."""
+    import json
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "jobs"))
+    from feature_engineering_tk_spark.datagen import generate_transcripts
+    from jobs.feature_job import build_pipeline
+
+    df = generate_transcripts(spark, n_convs=40, seed=7)
+    workdir = str(tmp_path / "ckpt")
+    build_pipeline(workdir, gap_seconds=1800.0).run(spark, df, resume=True)
+
+    pipe = build_pipeline(workdir, gap_seconds=60.0)
+    resumed = pipe.run(spark, df, resume=True)
+    fresh = build_pipeline(str(tmp_path / "fresh"), gap_seconds=60.0).run(spark, df, resume=False)
+    key = ["conv_id", "turn_idx"]
+    got = resumed.select(*key, "session_id").toPandas().sort_values(key).reset_index(drop=True)
+    want = fresh.select(*key, "session_id").toPandas().sort_values(key).reset_index(drop=True)
+    assert got.equals(want)
+    events = [json.loads(line)["event"] for line in open(pipe.journal_path)]
+    assert events.count("resume") == 0
+
+    # unchanged params still resume
+    again = build_pipeline(workdir, gap_seconds=60.0)
+    again.run(spark, df, resume=True)
+    events = [json.loads(line)["event"] for line in open(again.journal_path)]
+    assert events.count("resume") == 1
+
+
 def test_dataset_fingerprint_order_invariant(spark):
     from feature_engineering_tk_spark.sources.tables import dataset_fingerprint
 
