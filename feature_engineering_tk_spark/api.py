@@ -100,28 +100,12 @@ class DataPreprocessor(_Tracked):
         entity: str = "conv_id",
         order: str | list[str] = "turn_idx",
     ) -> "DataPreprocessor":
-        from feature_engineering_tk_spark.operators import window_features as W
         from feature_engineering_tk_spark.transforms.impute import Imputer
 
         columns = columns or _numeric_cols(self.df)
         _require_columns(self.df, columns)
-        if strategy in ("mean", "median", "mode", "drop", "fill_value"):
-            imp = Imputer(strategy=strategy, fill_value=fill_value).fit(self.df, columns)
-            self.df = imp.transform(self.df)
-        elif strategy == "forward_fill":
-            self.df = W.forward_fill(self.df, columns, entity=entity, order=order)
-        elif strategy == "backward_fill":
-            self.df = W.backward_fill(
-                self.df, columns, entity=entity, order=order, allow_future=True
-            )
-        elif strategy == "interpolate":
-            self.df = W.interpolate_linear(self.df, columns, entity=entity, order=order)
-        else:
-            raise InvalidStrategyError(
-                strategy,
-                ["mean", "median", "mode", "drop", "fill_value",
-                 "forward_fill", "backward_fill", "interpolate"],
-            )
+        imp = Imputer(strategy, fill_value, entity, order).fit(self.df, columns)
+        self.df = imp.transform(self.df)
         self._record("handle_missing_values", strategy=strategy, columns=columns)
         return self
 

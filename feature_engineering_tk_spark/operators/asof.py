@@ -9,9 +9,10 @@ Spark has no native as-of join. Three algorithms share ONE semantics
   ``max`` over right rows only carries the whole matching row onto
   every left anchor. Directions ``'backward'`` (default),
   ``'forward'`` and ``'nearest'``.
-- :func:`asof_join_packed` — the pipeline path: the right side packs
-  to one sorted array per entity and joins on the entity key, so a
-  pre-partitioned left side is never re-shuffled. Backward only.
+- :func:`asof_join_packed` — a left side already partitioned by the
+  entity and a bounded right side: the right side packs to one sorted
+  array per entity and joins on the entity key, so the left side is
+  never re-shuffled. Backward only.
 - :func:`asof_join_broadcast` — small right sides: broadcast join on
   the entity key, then the greatest matching row per anchor.
   Backward only, no tolerance.
@@ -210,8 +211,8 @@ def asof_join_packed(
     tolerance_seconds: float | None = None,
     suffix: str = "_asof",
 ) -> DataFrame:
-    """Backward as-of join that NEVER re-shuffles a pre-partitioned left
-    side — the pipeline path. Same semantics as :func:`asof_join`
+    """Backward as-of join that NEVER re-shuffles a left side already
+    partitioned by the entity, for a bounded right side. Same semantics as :func:`asof_join`
     backward: whole-row match, ``<=`` ties, greatest ``(ts, values…)``
     row wins among equal timestamps, NULL entity matches NULL,
     tolerance in integer µs.

@@ -32,7 +32,10 @@ the anchor (zero temporal leakage by construction):
 - tokens_roll_mean5 rolling mean over the last 5 turns
 - tokens_cum_sum    expanding sum
 - score_ffill       last-observation-carried-forward score
-- last_tool / last_tool_ts_s  as-of join of the latest prior tool call
+- last_tool         latest tool call with ts <= the anchor's ts
+                    (merge_asof backward; the greatest tool wins a ts
+                    tie): a running max of struct(ts, tool) over the
+                    stack's own conv_id window, no join or exchange
 """
 
 from __future__ import annotations
@@ -43,6 +46,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 
@@ -71,7 +75,6 @@ def build_parser() -> argparse.ArgumentParser:
 
 def build_pipeline(workdir: str, gap_seconds: float):
     from feature_engineering_tk_spark.operators import window_features as W
-    from feature_engineering_tk_spark.operators.asof import asof_join
     from feature_engineering_tk_spark.plans.pipeline import Pipeline
 
     ORDER = ["ts", "turn_idx"]  # stable per-conversation turn ordering
@@ -92,13 +95,15 @@ def build_pipeline(workdir: str, gap_seconds: float):
         return W.forward_fill(df, ["score_ffill"], entity="conv_id", order=ORDER)
 
     def attach_last_tool(df):
-        tool_calls = df.filter(F.col("tool").isNotNull()).select(
-            "conv_id",
-            "ts",
-            F.col("tool").alias("last_tool"),
+        # the default RANGE frame ends at the current row's ts peers, so
+        # a tool call at the anchor's ts is seen even from an earlier
+        # turn_idx; ordering by ts alone reuses the stack's sort
+        call = F.when(F.col("tool").isNotNull(), F.struct("ts", "tool"))
+        carry = F.max(call).over(Window.partitionBy("conv_id").orderBy("ts"))
+        found = F.col("ts").isNotNull() & carry["ts"].isNotNull()
+        return df.withColumn("last_tool", F.when(found, carry["tool"])).withColumn(
+            "ds", F.to_date("ts")
         )
-        out = asof_join(df, tool_calls, entity="conv_id", value_cols=["last_tool"], suffix="")
-        return out.withColumn("ds", F.to_date("ts"))
 
     pipe = Pipeline(workdir, partition_col="ds")
     pipe.add("sessionize", sessionize, {"gap_seconds": gap_seconds})

@@ -48,6 +48,30 @@ def test_preprocessor_reference_call_sites(mixed_df):
     assert "handle_missing_values" in summary and "1." in summary
 
 
+@pytest.mark.parametrize("strategy", ["forward_fill", "backward_fill", "interpolate"])
+def test_preprocessor_sequence_imputation_matches_window_operators(mixed_df, strategy):
+    """The facade's sequence strategies are the window operators, with
+    the caller's entity and order (non-defaults here) passed through."""
+    from feature_engineering_tk_spark import DataPreprocessor
+    from feature_engineering_tk_spark.operators import window_features as W
+
+    _, df = mixed_df
+    cols, entity, order = ["numeric1"], "categorical", "numeric2"
+    got = DataPreprocessor(df).handle_missing_values(
+        strategy=strategy, columns=cols, entity=entity, order=order
+    ).df
+    want = {
+        "forward_fill": lambda: W.forward_fill(df, cols, entity, order),
+        "backward_fill": lambda: W.backward_fill(df, cols, entity, order, allow_future=True),
+        "interpolate": lambda: W.interpolate_linear(df, cols, entity, order),
+    }[strategy]()
+    key = ["conv_id", "turn_idx"]
+    pd.testing.assert_frame_equal(
+        got.toPandas().sort_values(key).reset_index(drop=True),
+        want.toPandas().sort_values(key).reset_index(drop=True),
+    )
+
+
 def test_preprocessor_outliers_and_quality(spark):
     from feature_engineering_tk_spark import DataPreprocessor
 

@@ -226,7 +226,7 @@ def test_asof_packed_missing_entity_is_null(spark):
 
 
 def test_asof_packed_reuses_left_partitioning(spark, transcripts):
-    """The pipeline fast path: dropped onto a window-feature stack the
+    """Pre-partitioned left side: dropped onto a window-feature stack the
     packed as-of must add NO exchange on the big left side — the left
     branch of the plan keeps exactly the window's single conv_id
     exchange (the union-tag path re-shuffles everything instead)."""

@@ -4,6 +4,7 @@ checkpoint resume."""
 
 import os
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -116,6 +117,105 @@ def test_feature_job_resume_recomputes_changed_params(spark, tmp_path):
     again.run(spark, df, resume=True)
     events = [json.loads(line)["event"] for line in open(again.journal_path)]
     assert events.count("resume") == 1
+
+
+def _job_stages(workdir):
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "jobs"))
+    from jobs.feature_job import build_pipeline
+
+    return [s.fn for s in build_pipeline(workdir, gap_seconds=1800.0).stages]
+
+
+def test_attach_last_tool_matches_asof_join_on_ties_and_edges(spark, tmp_path):
+    """The window carry picks what a backward ``asof_join`` of the table
+    to its own tool calls picks: equal-ts calls are seen from an earlier
+    turn_idx, the greatest tool wins a ts tie, anchors before the first
+    call and conversations without calls get NULL."""
+    from datetime import datetime
+
+    from feature_engineering_tk_spark.operators.asof import asof_join
+
+    def t(s):
+        return None if s is None else datetime(2024, 1, 1, 0, 0, s)
+
+    rows = [
+        # a: anchor at the tie's ts before both calls, then two calls
+        # sharing (a, ts=20); the earlier tie row must see the later,
+        # greater tool
+        ("a", 0, t(10), "zeta"),
+        ("a", 1, t(20), None),
+        ("a", 2, t(20), "alpha"),
+        ("a", 3, t(20), "beta"),
+        ("a", 4, t(30), None),
+        # e: the same tie with the greater tool at the earlier turn_idx:
+        # the tool decides, not the turn order
+        ("e", 0, t(20), "beta"),
+        ("e", 1, t(20), "alpha"),
+        ("e", 2, t(21), None),
+        # b: anchors before the first tool call
+        ("b", 0, t(5), None),
+        ("b", 1, t(6), None),
+        ("b", 2, t(7), "x"),
+        ("b", 3, t(8), None),
+        # c: no tool calls at all
+        ("c", 0, t(1), None),
+        ("c", 1, t(2), None),
+        # d: a call without ts matches nothing; an anchor without ts
+        # sees nothing
+        ("d", 0, None, "y"),
+        ("d", 1, t(3), None),
+        ("d", 2, None, None),
+        # NULL entity matches NULL entity
+        (None, 0, t(1), "n"),
+        (None, 1, t(2), None),
+    ]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, ts timestamp, tool string")
+    got = _job_stages(str(tmp_path / "unused"))[3](df)
+
+    tool_calls = df.filter(F.col("tool").isNotNull()).select(
+        "conv_id", "ts", F.col("tool").alias("last_tool")
+    )
+    want = asof_join(df, tool_calls, entity="conv_id", value_cols=["last_tool"], suffix="")
+    want = want.withColumn("ds", F.to_date("ts"))
+
+    key = ["conv_id", "turn_idx"]
+    got_pdf = got.toPandas().sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got_pdf, want.toPandas().sort_values(key).reset_index(drop=True))
+    last = {(r.conv_id, r.turn_idx): r.last_tool for r in got_pdf.itertuples()}
+    assert [last[("a", i)] for i in range(5)] == ["zeta", "beta", "beta", "beta", "beta"]
+    assert [last[("e", i)] for i in range(3)] == ["beta", "beta", "beta"]
+    assert [last[("b", i)] for i in range(4)] == [None, None, "x", "x"]
+    assert [last[("c", i)] for i in range(2)] == [None, None]
+    assert [last[("d", i)] for i in range(3)] == [None, None, None]
+    assert [last[(None, i)] for i in range(2)] == ["n", "n"]
+
+
+def test_backfill_plan_has_one_exchange_and_one_scan(spark, tmp_path):
+    """The four stages over a parquet scan plan ONE conv_id exchange and
+    ONE scan: last_tool rides the window stack's partitioning instead of
+    a self-join that re-scans and re-shuffles the feature table."""
+    from feature_engineering_tk_spark.datagen import TRANSCRIPT_SCHEMA, generate_transcripts
+    from feature_engineering_tk_spark.sources import load_table
+
+    path = str(tmp_path / "turns")
+    generate_transcripts(spark, n_convs=20, seed=3).write.parquet(path)
+    cur = load_table(spark, path, schema=TRANSCRIPT_SCHEMA)
+    for fn in _job_stages(str(tmp_path / "unused")):
+        cur = fn(cur)
+    # AQE would wrap the plan in an AdaptiveSparkPlan that prints its
+    # initial plan alongside the final one
+    conf = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        plan = cur._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(conf, prev)
+    assert plan.count("Exchange hashpartitioning(conv_id") == 1, plan
+    assert plan.count("FileScan") == 1, plan
+    assert "Union" not in plan, plan
 
 
 def test_dataset_fingerprint_order_invariant(spark):
