@@ -196,7 +196,8 @@ def q_asof_nearest(spark, sf_dir):
 
 
 def q_asof_packed(spark, sf_dir):
-    """Pipeline fast-path as-of (operators/asof.py asof_join_packed):
+    """As-of join for a left side already partitioned by the entity and
+    a bounded right side (operators/asof.py asof_join_packed):
     the right side packs to one sorted array per entity (map-side
     partial agg), then an entity equi-join + row-local array pick —
     a pre-partitioned left side is NEVER re-shuffled (the union-tag

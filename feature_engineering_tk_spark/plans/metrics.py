@@ -7,18 +7,14 @@ tracker and ``AppStatusStore`` (no UI, REST endpoint or listener JAR;
 the same on ``local[*]`` and a cluster master). Jobs of other tags and
 other threads are not counted, and nothing is recomputed: ``rows`` is
 the write's own output-record count and ``skew`` is read from the
-tasks that ran. ``hot_entities`` lists the heaviest keys;
-``dir_bytes`` / ``partition_stats`` record the filesystem lineage of
-materialized stages.
+tasks that ran. ``dir_bytes`` / ``partition_stats`` record the
+filesystem lineage of materialized stages.
 """
 
 from __future__ import annotations
 
 import os
 import time
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 SETTLE_S = 10.0
 # journal ``exec`` field -> AppStatusStore StageData getter
@@ -29,19 +25,6 @@ EXEC_FIELDS = {
     "output_bytes": "outputBytes",
     "tasks": "numCompleteTasks",
 }
-
-
-def hot_entities(df: DataFrame, key: str = "conv_id", top: int = 10) -> list[dict]:
-    """The heaviest entities (e.g. 10^4-turn conversations) — drives
-    the salting factor choice for salted aggregation."""
-    rows = (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc())
-        .limit(top)
-        .collect()
-    )
-    return [{"entity": r[key], "rows": int(r["n"])} for r in rows]
 
 
 def dir_bytes(path: str) -> int:

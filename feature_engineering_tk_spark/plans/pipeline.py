@@ -4,8 +4,8 @@ The distributed analog of the reference's mutable-DataFrame-plus-
 operation-history model (``preprocessing.py:61-93``): a ``Pipeline``
 accumulates named stages (pure ``DataFrame -> DataFrame`` functions);
 ``run`` executes them lazily, materializing checkpoint stages as
-date-partitioned parquet, and journals each stage to ``lineage.jsonl``
-with params and wall time. Each stage runs under its own Spark job tag
+``ds``-partitioned parquet under the workdir, and journals each stage
+to ``lineage.jsonl`` with params and wall time. Each stage runs under its own Spark job tag
 (thread-local), and its metrics are read from that tag's jobs only
 (``metrics.job_metrics``; other stages' and other threads' jobs are not
 counted, and no extra job runs): ``exec`` (shuffle read/write, input
@@ -14,15 +14,19 @@ a job, so lazy stages have none) and ``skew`` (max/median shuffle
 records read per task: AQE coalescing can hide a hot key that shares a
 partition). A checkpoint adds ``rows`` (the write's own output-record
 count), its bytes and per-partition files (the north rule's
-per-Iceberg-partition lineage+metrics).
+per-Iceberg-partition lineage+metrics). Given an ``output`` table,
+``run`` materializes the last stage there instead (``sources.write_table``):
+the output is the final checkpoint, so a job writes its result once
+and the workdir keeps only the manifest and the journal.
 
 Resume semantics (determinism hard-part #4): a completed checkpoint is
 an artifact — on re-run, completed stages are NOT recomputed; the
-pipeline reloads the materialized parquet and continues, and fitted
-transform state must be persisted by the stage itself (see
-``transforms.state``) so nothing is ever refit mid-run. A checkpoint is
-reused only if the names and params of it and every stage before it,
-stored in the manifest, match the pipeline; otherwise it is recomputed.
+pipeline reloads the materialized table from the location the manifest
+recorded and continues, and fitted transform state must be persisted by
+the stage itself (see ``transforms.state``) so nothing is ever refit
+mid-run. A checkpoint is reused only if the names and params of it and
+every stage before it, and its location, match this run; otherwise it
+is recomputed.
 
 Leakage guard: inside ``strict_no_future()`` every future-reading
 window helper raises even when the caller passes ``allow_future=True``
@@ -41,10 +45,12 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from feature_engineering_tk_spark.operators import window_features as W
 from feature_engineering_tk_spark.plans import metrics as M
+from feature_engineering_tk_spark.sources import load_table, write_table
+
+PARTITION_COL = "ds"
 
 
 @contextmanager
@@ -72,9 +78,8 @@ class Stage:
 
 
 class Pipeline:
-    def __init__(self, workdir: str, partition_col: str = "ds"):
+    def __init__(self, workdir: str):
         self.workdir = workdir
-        self.partition_col = partition_col
         self.stages: list[Stage] = []
         os.makedirs(workdir, exist_ok=True)
 
@@ -119,40 +124,65 @@ class Pipeline:
     def _stage_dir(self, name: str) -> str:
         return os.path.join(self.workdir, f"stage={name}")
 
-    def _materialize(self, df: DataFrame, stage: Stage) -> DataFrame:
-        path = self._stage_dir(stage.name)
-        if self.partition_col in df.columns:
-            (
-                df.repartition(self.partition_col)
-                .write.mode("overwrite")
-                .partitionBy(self.partition_col)
-                .parquet(path)
-            )
+    def _materialize(self, df: DataFrame, path: str, output: bool) -> DataFrame:
+        """Write a checkpoint, partitioned by ``ds`` when the frame has
+        it, and read it back. The run's output goes through
+        ``write_table`` (Iceberg ``overwritePartitions`` or dynamic
+        partition overwrite); a workdir checkpoint is replaced whole."""
+        parts = (PARTITION_COL,) if PARTITION_COL in df.columns else ()
+        if parts:
+            df = df.repartition(PARTITION_COL)
+        if output:
+            write_table(df, path, partition_by=parts)
         else:
-            df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
+            df.write.mode("overwrite").partitionBy(*parts).parquet(path)
+        return load_table(df.sparkSession, path)
 
-    def run(self, spark: SparkSession, df: DataFrame, resume: bool = True) -> DataFrame:
+    def run(
+        self,
+        spark: SparkSession,
+        df: DataFrame,
+        resume: bool = True,
+        output: str | None = None,
+    ) -> DataFrame:
+        """Run the stages over ``df``. With ``output`` (an ``iceberg:``
+        table ref or a parquet path) the last stage is materialized
+        there instead of under the workdir: the output is the final
+        checkpoint, written once, and the returned frame reads it."""
+        if output is not None and "/" not in output and not output.startswith("iceberg:"):
+            # write_table writes a bare name as a parquet dir, but
+            # load_table reads a bare "a.b" as a catalog table
+            output = os.path.abspath(output)
         manifest = self._load_manifest() if resume else {"stages": {}}
         # stage names and params as the manifest stores them (JSON round
         # trip: tuples compare equal to lists)
         lineage = json.loads(json.dumps([[s.name, s.params] for s in self.stages]))
+        last = len(self.stages) - 1
+        # where each materialized stage lives in this run
+        paths = [
+            output if output is not None and i == last
+            else self._stage_dir(s.name) if s.checkpoint
+            else None
+            for i, s in enumerate(self.stages)
+        ]
 
         # find the last completed checkpoint built by the same stages and
-        # params → skip everything before it
+        # params at the same location → skip everything before it
         start_idx = 0
         cur = df
         for i, stage in enumerate(self.stages):
             done = manifest["stages"].get(stage.name) or {}
-            if stage.checkpoint and done.get("lineage") == lineage[: i + 1]:
+            if paths[i] and (done.get("path"), done.get("lineage")) == (paths[i], lineage[: i + 1]):
                 start_idx = i + 1
         if start_idx > 0:
-            resumed_from = self.stages[start_idx - 1]
-            cur = spark.read.parquet(self._stage_dir(resumed_from.name))
-            self._journal({"event": "resume", "from_stage": resumed_from.name, "ts": time.time()})
+            cur = load_table(spark, paths[start_idx - 1])
+            self._journal(
+                {"event": "resume", "from_stage": self.stages[start_idx - 1].name, "ts": time.time()}
+            )
 
         sc = spark.sparkContext
         for i, stage in enumerate(self.stages[start_idx:], start_idx):
+            path = paths[i]
             t0 = time.perf_counter()
             record: dict = {
                 "event": "stage",
@@ -164,8 +194,8 @@ class Pipeline:
             sc.addJobTag(tag)
             try:
                 cur = stage.fn(cur)
-                if stage.checkpoint:
-                    cur = self._materialize(cur, stage)
+                if path:
+                    cur = self._materialize(cur, path, output=path == output)
             finally:
                 sc.removeJobTag(tag)
             m = M.job_metrics(spark, tag)
@@ -173,12 +203,11 @@ class Pipeline:
                 record["exec"] = m["exec"]
                 if m["skew"] is not None:
                     record["skew"] = m["skew"]
-            if stage.checkpoint:
-                path = self._stage_dir(stage.name)
+            if path:
                 record |= {
                     "rows": m["rows"],
                     "checkpoint_path": path,
-                    "partitions": M.partition_stats(path, self.partition_col),
+                    "partitions": M.partition_stats(path, PARTITION_COL),
                     "bytes": M.dir_bytes(path),
                 }
                 manifest["stages"][stage.name] = {
@@ -191,19 +220,3 @@ class Pipeline:
             record["wall_s"] = round(time.perf_counter() - t0, 3)
             self._journal(record)
         return cur
-
-    # -- partition-level resume (incremental backfill) --------------------
-    def remaining_partitions(
-        self, spark: SparkSession, input_df: DataFrame, stage_name: str
-    ) -> DataFrame:
-        """Anti-join the input against a completed stage's written
-        partitions — the incremental/backfill path: only partitions not
-        yet materialized flow through (SURVEY §2.10 semi/anti join)."""
-        path = self._stage_dir(stage_name)
-        done = [p["partition"] for p in M.partition_stats(path, self.partition_col)]
-        if not done:
-            return input_df
-        done_df = spark.createDataFrame(
-            [(d,) for d in done], f"{self.partition_col} string"
-        ).select(F.col(self.partition_col).cast("date").alias(self.partition_col))
-        return input_df.join(F.broadcast(done_df), self.partition_col, "left_anti")

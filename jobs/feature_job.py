@@ -13,14 +13,15 @@ parquet dir or a deterministic synthetic transcript table::
     python jobs/feature_job.py --synthesize 500 --output /tmp/feat \
         --workdir /tmp/fe_ckpt
 
-The pipeline is checkpoint-resumable (plans/pipeline.py): every
-checkpointed stage lands as date-partitioned parquet with an atomic
-manifest, and each stage's lineage record, read from the Spark jobs
-tagged with that stage, goes to ``<workdir>/lineage.jsonl``: ``exec``
-(shuffle/IO bytes, tasks, jobs, stages), per-task shuffle-read
-``skew`` and the checkpoint's written ``rows``. A re-run with the same
---workdir and stage params (e.g. --gap-seconds) resumes after the last
-completed checkpoint instead of recomputing.
+The pipeline is checkpoint-resumable (plans/pipeline.py) and its
+final checkpoint IS the --output table: the features are written once,
+``ds``-partitioned, and --workdir holds only the atomic manifest and
+``lineage.jsonl``. Each stage's lineage record is read from the Spark
+jobs tagged with that stage: ``exec`` (shuffle/IO bytes, tasks, jobs,
+stages), per-task shuffle-read ``skew`` and the checkpoint's written
+``rows``. A re-run with the same --workdir, --output and stage params
+(e.g. --gap-seconds) resumes from the output without writing it again;
+changing any of them recomputes.
 
 Features per (conv_id, turn_idx, ts) anchor — every window frame ends
 at the current row, so no feature reads a turn with ts greater than
@@ -55,8 +56,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--input", help="iceberg:<tbl> | <catalog.db.tbl> | parquet path")
     p.add_argument("--synthesize", type=int, default=0, help="generate N synthetic conversations instead of reading --input")
     p.add_argument("--seed", type=int, default=42)
-    p.add_argument("--output", required=True, help="iceberg:<tbl> | parquet path")
-    p.add_argument("--workdir", required=True, help="checkpoint/manifest/lineage dir")
+    p.add_argument("--output", required=True, help="iceberg:<tbl> | parquet path; the final checkpoint")
+    p.add_argument("--workdir", required=True, help="manifest and lineage journal dir")
     p.add_argument("--gap-seconds", type=float, default=1800.0)
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--master", default=None)
@@ -105,7 +106,7 @@ def build_pipeline(workdir: str, gap_seconds: float):
             "ds", F.to_date("ts")
         )
 
-    pipe = Pipeline(workdir, partition_col="ds")
+    pipe = Pipeline(workdir)
     pipe.add("sessionize", sessionize, {"gap_seconds": gap_seconds})
     pipe.add("lag_features", lag_features)
     pipe.add("rolling_features", rolling_features)
@@ -146,7 +147,7 @@ def main(argv=None) -> None:
     args = build_parser().parse_args(argv)
     from feature_engineering_tk_spark.datagen import TRANSCRIPT_SCHEMA, generate_transcripts
     from feature_engineering_tk_spark.session import get_spark
-    from feature_engineering_tk_spark.sources import load_table, write_table
+    from feature_engineering_tk_spark.sources import load_table
 
     spark = get_spark(master=args.master, app_name="fe-tk-feature-job")
     spark.sparkContext.setLogLevel("WARN")
@@ -159,12 +160,11 @@ def main(argv=None) -> None:
         raise SystemExit("need --input or --synthesize N")
 
     pipe = build_pipeline(args.workdir, args.gap_seconds)
-    feat = pipe.run(spark, df, resume=not args.no_resume)
-    write_table(feat, args.output, partition_by=("ds",), mode="overwrite")
+    feat = pipe.run(spark, df, resume=not args.no_resume, output=args.output)
     if args.bucket_output:
         table = register_bucketed(feat, args.output, args.bucket_output)
         print(f"registered bucketed table {table} ({args.bucket_output} buckets)")
-    print(f"wrote features to {args.output}; lineage at {pipe.journal_path}")
+    print(f"features at {args.output}; lineage at {pipe.journal_path}")
     spark.stop()
 
 

@@ -1,5 +1,5 @@
-"""Pipeline: lineage journal, checkpoint resume determinism, leakage
-guard, partition-level anti-join resume, skew metrics, salted agg."""
+"""Pipeline: lineage journal, checkpoint resume determinism, the output
+as the last checkpoint, leakage guard, skew metrics, salted agg."""
 
 import json
 import os
@@ -11,13 +11,12 @@ from pyspark.sql import functions as F
 
 from feature_engineering_tk_spark.operators import window_features as W
 from feature_engineering_tk_spark.operators.salted import salted_group_agg
-from feature_engineering_tk_spark.plans import metrics as M
 from feature_engineering_tk_spark.plans.pipeline import Pipeline, strict_no_future
 
 
 def _mkpipe(tmp_path, tag):
     wd = os.path.join(str(tmp_path), tag)
-    p = Pipeline(workdir=wd, partition_col="ds")
+    p = Pipeline(workdir=wd)
     p.add("sessionize", lambda df: W.sessionize(df), {"gap_s": 1800})
     p.add("lag", lambda df: W.with_lag(df, "tokens", 1), {"k": 1}, checkpoint=True)
     p.add(
@@ -68,6 +67,34 @@ def test_pipeline_resume_skips_completed(spark, with_ds, tmp_path):
     assert any(r.get("event") == "resume" for r in resumed)
 
 
+def test_pipeline_output_materializes_last_stage(spark, with_ds, tmp_path, monkeypatch):
+    """With ``output`` the last stage, checkpoint or not, is written
+    there partitioned by ds; earlier checkpoints stay in the workdir,
+    and a re-run resumes from the output without running any stage. A
+    bare relative name is a parquet dir, even with a dot in it."""
+    monkeypatch.chdir(tmp_path)
+    p = _mkpipe(tmp_path, "out")
+    out = "out_tbl.v1"
+    first = p.run(spark, with_ds, resume=False, output=out).toPandas()
+    assert sorted(os.listdir(p.workdir)) == ["lineage.jsonl", "manifest.json", "stage=lag"]
+    assert any(d.startswith("ds=") for d in os.listdir(tmp_path / out))
+
+    p2 = _mkpipe(tmp_path, "out")
+
+    def boom(df):
+        raise AssertionError("stage re-ran on resume from the output")
+
+    for stage in p2.stages:
+        stage.fn = boom
+    second = p2.run(spark, with_ds, output=out).toPandas()
+    key = ["conv_id", "turn_idx"]
+    assert first.sort_values(key).reset_index(drop=True).equals(
+        second.sort_values(key).reset_index(drop=True)
+    )
+    last = json.loads(open(p2.journal_path).readlines()[-1])
+    assert (last["event"], last["from_stage"]) == ("resume", "rolling")
+
+
 def test_strict_no_future_blocks_leaks(transcripts):
     with strict_no_future():
         with pytest.raises(W.FutureLeakError):
@@ -76,18 +103,6 @@ def test_strict_no_future_blocks_leaks(transcripts):
             W.backward_fill(transcripts, ["score"], allow_future=True)
     # restored afterwards
     assert W.with_lead(transcripts, "tokens", 1, allow_future=True) is not None
-
-
-def test_remaining_partitions_anti_join(spark, with_ds, tmp_path):
-    p = _mkpipe(tmp_path, "run3")
-    p.run(spark, with_ds)
-    remaining = p.remaining_partitions(spark, with_ds, "lag")
-    assert remaining.count() == 0  # everything materialized
-    # new partition appears → only it flows through
-    new = with_ds.limit(10).withColumn("ds", F.lit("2030-01-01").cast("date"))
-    appended = with_ds.unionByName(new)
-    rem2 = p.remaining_partitions(spark, appended, "lag")
-    assert rem2.count() == 10
 
 
 def test_entity_skew_detects_hot_keys(spark, tmp_path):
@@ -112,8 +127,6 @@ def test_entity_skew_detects_hot_keys(spark, tmp_path):
     rec = next(json.loads(l) for l in open(pipe.journal_path))
     assert rec["rows"] == 1000
     assert rec["skew"] > 5
-    hot = M.hot_entities(df, "conv_id", top=1)
-    assert hot[0]["entity"] == "hot" and hot[0]["rows"] == 900
 
 
 def test_journal_isolated_from_concurrent_jobs(spark, transcripts, tmp_path):
@@ -220,7 +233,7 @@ def test_journal_records_shuffle_bytes(spark, transcripts, tmp_path):
     from feature_engineering_tk_spark.operators import window_features as W
     from feature_engineering_tk_spark.plans.pipeline import Pipeline
 
-    pipe = Pipeline(str(tmp_path / "wd"), partition_col="ds")
+    pipe = Pipeline(str(tmp_path / "wd"))
     pipe.add("feat", lambda df: W.sessionize(df, 1800.0).withColumn("ds", F.to_date("ts")), checkpoint=True)
     pipe.run(spark, transcripts, resume=False)
 

@@ -119,6 +119,86 @@ def test_feature_job_resume_recomputes_changed_params(spark, tmp_path):
     assert events.count("resume") == 1
 
 
+_JOB_SCRIPT = """
+import json
+import os
+import sys
+
+from jobs.feature_job import main
+
+
+def mtimes(path):
+    return {
+        os.path.join(root, f): os.stat(os.path.join(root, f)).st_mtime_ns
+        for root, _dirs, files in os.walk(path)
+        for f in files
+    }
+
+
+inp, out, out2, work = sys.argv[1:]
+args = ["--input", inp, "--workdir", work, "--master", "local[2]"]
+main(args + ["--output", out, "--no-resume"])
+first = mtimes(out)
+main(args + ["--output", out])  # same args: resume
+second = mtimes(out)
+main(args + ["--output", out2])  # same workdir, new output: recompute
+print(json.dumps({"first": first, "second": second}))
+"""
+
+
+def test_feature_job_writes_output_once_and_resumes_from_it(spark, tmp_path):
+    """The job's final checkpoint is its --output: one ds-partitioned
+    write equal to the pipeline's result written by ``write_table``, a
+    workdir without parquet, a journal naming the output, a resume that
+    rewrites nothing, and a recompute when --output changes."""
+    import json
+    import subprocess
+    import sys
+
+    from feature_engineering_tk_spark.datagen import TRANSCRIPT_SCHEMA, generate_transcripts
+    from feature_engineering_tk_spark.sources import load_table, write_table
+    from jobs.feature_job import build_pipeline
+
+    inp, out, out2, work = (str(tmp_path / d) for d in ("turns", "out", "out2", "work"))
+    generate_transcripts(spark, n_convs=30, seed=7).write.parquet(inp)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _JOB_SCRIPT, inp, out, out2, work],
+        capture_output=True, text=True, env=os.environ | {"PYTHONPATH": repo},
+        cwd=tmp_path, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    mtimes = json.loads(proc.stdout.strip().splitlines()[-1])
+
+    # the output equals the pipeline's result written by write_table
+    df = load_table(spark, inp, schema=TRANSCRIPT_SCHEMA)
+    ref = str(tmp_path / "ref")
+    feat = build_pipeline(str(tmp_path / "ref_work"), gap_seconds=1800.0).run(spark, df, resume=False)
+    write_table(feat, ref, partition_by=("ds",))
+    key = ["conv_id", "turn_idx"]
+    want = spark.read.parquet(ref).toPandas().sort_values(key).reset_index(drop=True)
+    for path in (out, out2):
+        got = spark.read.parquet(path).toPandas().sort_values(key).reset_index(drop=True)
+        pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+    # the workdir holds only the manifest and the journal
+    assert sorted(os.listdir(work)) == ["lineage.jsonl", "manifest.json"]
+
+    events = [json.loads(line) for line in open(os.path.join(work, "lineage.jsonl"))]
+    assert [e["event"] for e in events] == ["stage"] * 4 + ["resume"] + ["stage"] * 4
+    n_rows = df.count()
+    days = sorted(str(r.ds) for r in df.select(F.to_date("ts").alias("ds")).distinct().collect())
+    for rec, path in ((events[3], out), (events[8], out2)):
+        assert rec["stage"] == "attach_last_tool"
+        assert rec["checkpoint_path"] == path
+        assert rec["rows"] == n_rows
+        assert [p["partition"] for p in rec["partitions"]] == days
+        assert all(p["files"] > 0 for p in rec["partitions"])
+    assert events[4]["from_stage"] == "attach_last_tool"
+    # the resumed run wrote nothing
+    assert mtimes["second"] == mtimes["first"] and mtimes["first"]
+
+
 def _job_stages(workdir):
     import sys
 
