@@ -126,6 +126,7 @@ class DataPreprocessor(_Tracked):
         threshold: float = 3.0,
         replacement: str = "median",
     ) -> "DataPreprocessor":
+        from feature_engineering_tk_spark.operators.quantiles import exact_quantiles_many
         from feature_engineering_tk_spark.transforms.outliers import OutlierDetector
 
         columns = columns or _numeric_cols(self.df)
@@ -139,12 +140,12 @@ class DataPreprocessor(_Tracked):
         elif action == "replace":
             if replacement == "nan":
                 repl = {}
-            else:
-                fn = F.avg if replacement == "mean" else (
-                    lambda c: F.percentile(F.col(c), F.lit(0.5))
-                )
-                row = self.df.agg(*[fn(c).alias(c) for c in columns]).first()
+            elif replacement == "mean":
+                row = self.df.agg(*[F.avg(c).alias(c) for c in columns]).first()
                 repl = {c: float(row[c]) for c in columns if row[c] is not None}
+            else:
+                qs = exact_quantiles_many(self.df, {c: [0.5] for c in columns})
+                repl = {c: qs[c][0] for c in columns if qs[c][0] is not None}
             self.df = det.replace(self.df, repl)
         else:
             raise InvalidStrategyError(action, ["remove", "cap", "replace"])

@@ -1705,6 +1705,14 @@ def char_entropy(
     )
 
 
+def _pmi(n_tokens: str, n_pair: str, c_a: str, c_b: str) -> Column:
+    """``ln(n_tokens·n_pair / (c_a·c_b))`` with every factor cast to
+    double before it is multiplied: a product of two long counts wraps
+    past ~3e9, and below 2^53 the double products are the same bits."""
+    d = [F.col(c).cast("double") for c in (n_tokens, n_pair, c_a, c_b)]
+    return F.log(d[0] * d[1] / (d[2] * d[3]))
+
+
 def skipgram_cooccurrence(
     df: DataFrame,
     column: str = "text",
@@ -1787,14 +1795,7 @@ def skipgram_cooccurrence(
             "n_cooccur",
             "c_a",
             "c_b",
-            F.round(
-                F.log(
-                    F.col("_n")
-                    * F.col("n_cooccur")
-                    / (F.col("c_a") * F.col("c_b")).cast("double")
-                ),
-                round_dp,
-            ).alias("pmi"),
+            F.round(_pmi("_n", "n_cooccur", "c_a", "c_b"), round_dp).alias("pmi"),
         )
     )
     if top_k is None:

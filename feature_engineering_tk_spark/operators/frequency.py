@@ -499,8 +499,9 @@ def cms_estimate(
     salt: str = "v1",
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
-    """Point-frequency estimates for ``values`` from a merged CMS cell
-    table: (value, estimate) with ``estimate = min over rows of the
+    """Point-frequency estimates for ``values`` from a CMS cell table
+    (merged, or per slice — slices are summed cell-wise first):
+    (value, estimate) with ``estimate = min over rows of the
     probed cells`` (missing cell = 0).  Deterministic: the same sketch
     table and query set always produce the same estimates, and with
     ``hash_mode='md5'`` the DuckDB oracle replays them bit-for-bit.
@@ -525,10 +526,13 @@ def cms_estimate(
             _cms_probes(F.col("value"), d, w, salt, hash_mode)
         ).alias("_p"),
     ).select("value", F.col("_p.row").alias("row"), F.col("_p.col").alias("col"))
-    # the sketch table is ≤ depth × width cells — broadcast it so the
-    # probe lookup is a map-side hash join (the probe side can't be the
-    # build side of a LEFT join)
-    joined = probes.join(F.broadcast(sketches), ["row", "col"], "left")
+    # a per-slice table holds one row per (slice, cell): sum each cell
+    # first, or the min mixes slices and undercounts. The merged table
+    # is ≤ depth × width cells — broadcast it so the probe lookup is a
+    # map-side hash join (the probe side can't be the build side of a
+    # LEFT join)
+    cells = sketches.groupBy("row", "col").agg(F.sum("weight").alias("weight"))
+    joined = probes.join(F.broadcast(cells), ["row", "col"], "left")
     return (
         joined.groupBy("value")
         .agg(F.min(F.coalesce(F.col("weight"), F.lit(0))).alias("estimate"))

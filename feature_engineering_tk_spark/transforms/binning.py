@@ -2,7 +2,8 @@
 (``feature_engineering.py:370-442``) with pandas edge semantics:
 
 - quantile (``pd.qcut(q, duplicates='drop')``): EXACT quantile edges
-  (linear interpolation), duplicate edges dropped, intervals
+  (linear interpolation, one range sort in
+  ``operators.quantiles``), duplicate edges dropped, intervals
   ``(lo, hi]`` with the minimum included in bin 0, integer codes.
 - uniform (``pd.cut(bins=k)``): ``linspace(min, max, k+1)`` edges with
   the left edge widened by 0.1% of the range, right-closed intervals.
@@ -57,7 +58,7 @@ class QuantileBinner(FittedStateMixin):
 
         probs = np.linspace(0.0, 1.0, self.bins + 1).tolist()
         if self.exact:
-            # distributed sort-select: exact, no single-reducer buffer
+            # distributed range sort: exact, no single-reducer buffer
             qs = exact_quantiles(df, column, probs)
         else:
             qs = approx_quantiles(df, column, probs)

@@ -28,9 +28,9 @@ either — this module closes that gap as first-class fitted encoders:
 - :func:`feature_cross` — crossed categorical interactions
   (optionally hashed to a bounded bucket count).
 
-Scale: vocabularies are fitted with ``distinct()`` (bounded by the
-high-cardinality warning) and applied as literal map expressions —
-no join, no shuffle on the big table. For vocabularies too large for a
+Scale: vocabularies are fitted with one ``distinct()`` action (bounded
+by the high-cardinality warning; sorted on the driver) and applied as
+literal map expressions — no join, no shuffle on the big table. For vocabularies too large for a
 literal map, ``transform`` falls back to a broadcast join.
 """
 
@@ -48,15 +48,14 @@ HIGH_CARDINALITY_WARNING_THRESHOLD = 100
 _MAP_EXPR_MAX = 1000  # above this, use broadcast join instead of literal map
 
 
-def _fit_vocab(df: DataFrame, column: str) -> list[str]:
-    vals = (
-        df.select(F.col(column).cast("string").alias("v"))
-        .filter(F.col("v").isNotNull())
-        .distinct()
-        .orderBy("v")
-        .collect()
-    )
-    return [r["v"] for r in vals]
+def _fit_vocab(df: DataFrame, column: str) -> tuple[list[str], bool]:
+    """Sorted distinct non-null values of ``column`` (as strings) and
+    whether it holds a NULL — one ``distinct().collect()``. Python's
+    code-point order equals Spark's UTF-8 byte order for strings, so
+    the driver-side sort is ``orderBy``'s order without a range sort."""
+    rows = df.select(F.col(column).cast("string").alias("v")).distinct().collect()
+    vals = [r["v"] for r in rows]
+    return sorted(v for v in vals if v is not None), None in vals
 
 
 class LabelEncoder(FittedStateMixin):
@@ -64,8 +63,7 @@ class LabelEncoder(FittedStateMixin):
         self.state_ = None
 
     def fit(self, df: DataFrame, column: str) -> "LabelEncoder":
-        vocab = _fit_vocab(df, column)
-        has_null = df.filter(F.col(column).isNull()).limit(1).count() > 0
+        vocab, has_null = _fit_vocab(df, column)
         self.state_ = {"column": column, "vocab": vocab, "has_null": has_null}
         return self
 
@@ -104,7 +102,7 @@ class OneHotEncoder(FittedStateMixin):
         return {"prefix": self.prefix, "drop_first": self.drop_first, "dummy_na": self.dummy_na}
 
     def fit(self, df: DataFrame, column: str) -> "OneHotEncoder":
-        vocab = _fit_vocab(df, column)
+        vocab, _ = _fit_vocab(df, column)
         if len(vocab) > HIGH_CARDINALITY_WARNING_THRESHOLD:
             warnings.warn(
                 f"{column} has {len(vocab)} categories "
@@ -477,8 +475,9 @@ class WoEEncoder(FittedStateMixin):
     classic selection gauge (``iv_`` attribute; <0.02 useless,
     >0.5 suspicious/leaky).
 
-    Scale: fit = ONE ``groupBy(column)`` with map-side partial
-    aggregation (two longs per category cross the shuffle, never rows);
+    Scale: fit = ONE ``groupBy(column)`` action with map-side partial
+    aggregation (two longs and the binary-target check per category
+    cross the shuffle, never rows);
     transform = literal map below ``_MAP_EXPR_MAX`` else broadcast
     join — zero shuffle on the data table at any cardinality. Unseen
     categories and nulls → 0.0 (the "no evidence" point)."""
@@ -496,17 +495,23 @@ class WoEEncoder(FittedStateMixin):
         import math
 
         t = F.col(target).cast("double")
-        bad = df.filter(t.isNotNull() & ~t.isin(0.0, 1.0)).limit(1).count()
-        if bad:
+        # one action: the NULL-category group carries the binary check
+        # for rows whose category is NULL, then drops out
+        rows = (
+            df.filter(t.isNotNull())
+            .groupBy(F.col(column).cast("string").alias("v"))
+            .agg(
+                F.sum(t).alias("pos"),
+                F.count(F.lit(1)).alias("n"),
+                F.max(~t.isin(0.0, 1.0)).alias("bad"),
+            )
+            .collect()
+        )
+        if any(r["bad"] for r in rows):
             from feature_engineering_tk_spark.exceptions import DataTypeError
 
             raise DataTypeError(target, "binary 0/1", "non-binary values present")
-        rows = (
-            df.filter(F.col(column).isNotNull() & t.isNotNull())
-            .groupBy(F.col(column).cast("string").alias("v"))
-            .agg(F.sum(t).alias("pos"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
+        rows = [r for r in rows if r["v"] is not None]
         if not rows:
             from feature_engineering_tk_spark.exceptions import InsufficientDataError
 

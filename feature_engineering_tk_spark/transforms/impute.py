@@ -2,10 +2,12 @@
 (``preprocessing.py:95-221``), 8 strategies.
 
 Global strategies (mean/median/mode/fill_value) are fit/transform:
-fit = one aggregate job (exact ``percentile`` for median — pandas
-midpoint interpolation parity; mode = smallest value among max-count
-ties, pandas ``mode()[0]`` parity), transform = ``na.fill`` with the
-fitted scalars. Sequence strategies (forward/backward fill,
+fit = one aggregate job for mean; median = one range sort over all
+the columns (``operators.quantiles.exact_quantiles_many``: exact order
+statistics, pandas linear interpolation, no task ever holds a whole
+column's distinct values); mode = smallest value among max-count ties,
+pandas ``mode()[0]`` parity. Transform = ``na.fill``
+with the fitted scalars. Sequence strategies (forward/backward fill,
 interpolate) delegate to the window operators (per-entity, ordered).
 
 Point-in-time variant: ``fit`` on a training snapshot (e.g. rows with
@@ -61,11 +63,11 @@ class Imputer(FittedStateMixin):
             row = df.agg(*[F.avg(c).alias(c) for c in columns]).first()
             fills = {c: row[c] for c in columns}
         elif self.strategy == "median":
-            # exact percentile — linear interpolation == pandas median
-            row = df.agg(
-                *[F.percentile(F.col(c), F.lit(0.5)).alias(c) for c in columns]
-            ).first()
-            fills = {c: row[c] for c in columns}
+            from feature_engineering_tk_spark.operators.quantiles import exact_quantiles_many
+
+            # exact order statistics, linear interpolation == pandas median
+            qs = exact_quantiles_many(df, {c: [0.5] for c in columns})
+            fills = {c: qs[c][0] for c in columns}
         elif self.strategy == "mode":
             # pandas mode()[0]: smallest value among max-count ties —
             # one shuffle per column on the (value,count) pairs only

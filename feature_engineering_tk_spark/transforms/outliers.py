@@ -1,7 +1,8 @@
 """Outlier detection & handling — reference §2.4
 (``data_analysis.py:96-141``, ``preprocessing.py:274-421``).
 
-- IQR: Q1/Q3 via EXACT ``percentile`` (pandas linear interpolation),
+- IQR: Q1/Q3 via EXACT quantiles (pandas linear interpolation, one
+  range sort over all columns, ``operators.quantiles``),
   fence = [Q1 - k·IQR, Q3 + k·IQR], default k=1.5.
 - zscore: |x-mean|/std > t, std ddof=1 (``stddev_samp``), zero-std
   columns skipped (never flagged).
@@ -12,13 +13,14 @@
   quartiles (IQR) at 25% — the right detector for corpus-quality
   columns with heavy junk tails.  Zero-MAD columns skipped like
   zero-std.  Extends the reference's iqr/zscore pair
-  (data_analysis.py:96-141); fit is TWO aggregate jobs (median pass,
-  then |x−median| median pass), both exact percentiles.
+  (data_analysis.py:96-141); fit is TWO range sorts (median pass,
+  then |x−median| median pass), both exact quantiles.
 - actions: remove (masks OR-combined across columns, applied once —
   the reference's single-pass optimization), cap (clamp at the fence),
   replace with median/mean/null.
 
-Fit is one aggregate job; flag/handle are pure column expressions.
+zscore fit is one aggregate job; flag/handle are pure column
+expressions.
 """
 
 from __future__ import annotations
@@ -26,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from feature_engineering_tk_spark.operators.quantiles import exact_quantiles_many
 from feature_engineering_tk_spark.transforms.state import FittedStateMixin
 
 
@@ -44,29 +47,23 @@ class OutlierDetector(FittedStateMixin):
         return {"method": self.method, "factor": self.factor, "threshold": self.threshold}
 
     def fit(self, df: DataFrame, columns: list[str]) -> "OutlierDetector":
-        aggs = []
-        for c in columns:
-            if self.method == "iqr":
-                aggs += [
-                    F.percentile(F.col(c), F.lit(0.25)).alias(f"{c}__q1"),
-                    F.percentile(F.col(c), F.lit(0.75)).alias(f"{c}__q3"),
-                ]
-            elif self.method == "mad":
-                aggs += [F.percentile(F.col(c), F.lit(0.5)).alias(f"{c}__med")]
-            else:
-                aggs += [F.avg(c).alias(f"{c}__m"), F.stddev_samp(c).alias(f"{c}__s")]
-        row = df.agg(*aggs).first()
-        mads = {}
-        if self.method == "mad":
-            # second pass: median of |x − median| per column, one agg job
-            dev_aggs = [
-                F.percentile(
-                    F.abs(F.col(c) - F.lit(row[f"{c}__med"])), F.lit(0.5)
-                ).alias(f"{c}__mad")
-                for c in columns
-                if row[f"{c}__med"] is not None
-            ]
-            mads = dict(df.agg(*dev_aggs).first().asDict()) if dev_aggs else {}
+        row, mads = {}, {}
+        if self.method == "iqr":
+            qs = exact_quantiles_many(df, {c: [0.25, 0.75] for c in columns})
+            row = {f"{c}__{k}": q for c in columns for k, q in zip(("q1", "q3"), qs[c])}
+        elif self.method == "mad":
+            meds = exact_quantiles_many(df, {c: [0.5] for c in columns})
+            row = {f"{c}__med": meds[c][0] for c in columns}
+            # second range sort: median of |x − median| per column
+            dev = {c: m[0] for c, m in meds.items() if m[0] is not None}
+            if dev:
+                absdev = df.select(*[F.abs(F.col(c) - F.lit(m)).alias(c) for c, m in dev.items()])
+                got = exact_quantiles_many(absdev, {c: [0.5] for c in dev})
+                mads = {f"{c}__mad": got[c][0] for c in dev}
+        else:
+            aggs = [F.avg(c).alias(f"{c}__m") for c in columns]
+            aggs += [F.stddev_samp(c).alias(f"{c}__s") for c in columns]
+            row = df.agg(*aggs).first().asDict()
         bounds = {}
         for c in columns:
             if self.method == "iqr":

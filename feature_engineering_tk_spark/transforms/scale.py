@@ -5,12 +5,15 @@ Parity traps handled:
 - 'standard' uses POPULATION std (sklearn StandardScaler ddof=0; the
   reference's tests assert ``std(ddof=0)==1``) → ``stddev_pop``.
 - 'robust' uses EXACT quantiles with linear interpolation (sklearn
-  RobustScaler) → ``percentile``, never ``percentile_approx``.
+  RobustScaler) → one distributed range sort for the quartiles of
+  every column (``operators.quantiles.exact_quantiles_many``), never
+  ``percentile_approx`` unless ``exact=False``.
 
-Scale path: fit is ONE aggregate job over all columns (map-side
-partial aggregation, tiny result to driver); transform is pure column
-arithmetic with the fitted scalars folded in as literals — fully
-codegen'd, no shuffle, no Python.
+Scale path: a standard/minmax fit is ONE aggregate action over all
+columns (map-side partial aggregation, tiny result to driver; the
+row count rides in it for the empty-input check); transform is pure
+column arithmetic with the fitted scalars folded in as literals —
+fully codegen'd, no shuffle, no Python.
 """
 
 from __future__ import annotations
@@ -18,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from feature_engineering_tk_spark.operators.quantiles import exact_quantiles_many
 from feature_engineering_tk_spark.transforms.state import FittedStateMixin
 
 
@@ -37,32 +41,31 @@ class Scaler(FittedStateMixin):
         return {"method": self.method, "exact": self.exact}
 
     def fit(self, df: DataFrame, columns: list[str]) -> "Scaler":
-        if df.isEmpty():
+        if self.method == "robust" and self.exact:
+            qs = exact_quantiles_many(df, {c: [0.25, 0.5, 0.75] for c in columns})
+            # only an input with no non-null value can be empty
+            empty = all(qs[c][1] is None for c in columns) and df.isEmpty()
+            center = {c: qs[c][1] for c in columns}
+            scale = {c: None if qs[c][1] is None else qs[c][2] - qs[c][0] for c in columns}
+        else:
+            aggs = [F.count(F.lit(1)).alias("__rows")]
+            for c in columns:
+                if self.method == "standard":
+                    aggs += [F.avg(c).alias(f"{c}__m"), F.stddev_pop(c).alias(f"{c}__s")]
+                elif self.method == "minmax":
+                    aggs += [F.min(c).alias(f"{c}__m"), F.max(c).alias(f"{c}__s")]
+                else:  # robust, approximate: median + IQR
+                    m, q1, q3 = (F.percentile_approx(c, p, 10000) for p in (0.5, 0.25, 0.75))
+                    aggs += [m.alias(f"{c}__m"), (q3 - q1).alias(f"{c}__s")]
+            row = df.agg(*aggs).first()
+            empty = row["__rows"] == 0
+            center = {c: row[f"{c}__m"] for c in columns}
+            scale = {c: row[f"{c}__s"] for c in columns}
+        if empty:
             from feature_engineering_tk_spark.exceptions import EmptyDataFrameError
 
             raise EmptyDataFrameError("cannot fit scaler on empty DataFrame")
-        aggs = []
-        for c in columns:
-            if self.method == "standard":
-                aggs += [F.avg(c).alias(f"{c}__m"), F.stddev_pop(c).alias(f"{c}__s")]
-            elif self.method == "minmax":
-                aggs += [F.min(c).alias(f"{c}__m"), F.max(c).alias(f"{c}__s")]
-            else:  # robust: median + IQR
-                pct = F.percentile if self.exact else (
-                    lambda col, p: F.percentile_approx(col, p, F.lit(10000))
-                )
-                aggs += [
-                    pct(F.col(c), F.lit(0.5)).alias(f"{c}__m"),
-                    (
-                        pct(F.col(c), F.lit(0.75)) - pct(F.col(c), F.lit(0.25))
-                    ).alias(f"{c}__s"),
-                ]
-        row = df.agg(*aggs).first()
-        self.state_ = {
-            "columns": list(columns),
-            "center": {c: row[f"{c}__m"] for c in columns},
-            "scale": {c: row[f"{c}__s"] for c in columns},
-        }
+        self.state_ = {"columns": list(columns), "center": center, "scale": scale}
         return self
 
     def transform(self, df: DataFrame) -> DataFrame:

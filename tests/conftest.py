@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -34,3 +35,24 @@ def transcripts(spark, transcripts_pdf):
     df = df.repartition(4, "conv_id").cache()
     df.count()
     return df
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` -> ``(fn(), number of Spark jobs fn ran)``,
+    counted under a job group of its own (``setJobGroup``)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"spark-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status store is filled asynchronously: drain the bus first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

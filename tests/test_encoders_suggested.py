@@ -382,6 +382,27 @@ def test_woe_rejects_non_binary_target(cats):
         WoEEncoder().fit(cats, "cat", "y")  # y is continuous
 
 
+def test_woe_fit_is_one_action_and_checks_null_category_rows(spark, cats, spark_jobs):
+    """The binary-target check rides the fit's one groupBy: a valid fit
+    runs at most two Spark jobs (one aggregate exchange under AQE), and
+    a non-binary target on a row whose category is NULL still raises,
+    though that row's group is dropped before WoE and IV."""
+    from feature_engineering_tk_spark.exceptions import DataTypeError
+    from feature_engineering_tk_spark.transforms.encode import WoEEncoder
+
+    binary = cats.withColumn("t", (F.col("y") > 20.0).cast("int"))
+    enc, jobs = spark_jobs(lambda: WoEEncoder().fit(binary, "cat", "t"))
+    assert jobs <= 2
+    assert sorted(enc.state_["woe"]) == ["a", "b", "c", "d", "e"]
+
+    rows = [("a", 1.0), ("a", 0.0), ("b", 0.0), ("b", 1.0), (None, 0.0)]
+    ok = spark.createDataFrame(rows, "cat string, t double")
+    assert sorted(WoEEncoder().fit(ok, "cat", "t").state_["woe"]) == ["a", "b"]
+    bad = spark.createDataFrame(rows + [(None, 2.0)], "cat string, t double")
+    with pytest.raises(DataTypeError):
+        WoEEncoder().fit(bad, "cat", "t")
+
+
 def test_woe_persistence_roundtrip(cats, tmp_path):
     from feature_engineering_tk_spark.transforms.encode import WoEEncoder
     from feature_engineering_tk_spark.transforms.state import (

@@ -213,6 +213,30 @@ class TestCountMin:
         for r in est:
             assert r["estimate"] >= truth[r["value"]]
 
+    def test_per_slice_table_never_undercounts(self, spark, sliced):
+        """A per-slice table (``by=``) is summed cell-wise before the
+        min: every estimate is >= the value's total over all slices,
+        with and without collisions, and 0 still proves absence."""
+        from feature_engineering_tk_spark.operators.frequency import (
+            cms_estimate,
+            cms_sketch_table,
+        )
+
+        truth = {"a": 17, "b": 7, "c": 3}
+        probe = sorted(truth) + ["absent"]
+        for width in (512, 4):
+            sk = cms_sketch_table(sliced, "val", by="shard", depth=3, width=width)
+            est = {
+                r["value"]: r["estimate"]
+                for r in cms_estimate(sk, probe, depth=3, width=width).collect()
+            }
+            for v in probe:
+                assert est[v] >= truth.get(v, 0)
+                if est[v] == 0:
+                    assert v not in truth
+            if width == 512:  # no collisions: exact
+                assert est == {**truth, "absent": 0}
+
     def test_merge_equals_whole(self, spark, sliced):
         from feature_engineering_tk_spark.operators.frequency import (
             cms_sketch_table,

@@ -697,6 +697,21 @@ class TestSkipgramCooccurrence:
             pmi = math.log(n_tok * want[(a, b)] / (uni[a] * uni[b]))
             assert r["pmi"] == pytest.approx(pmi, abs=1e-8)
 
+    def test_pmi_survives_long_count_overflow(self, spark):
+        """Counts of 4e9 make ``c_a * c_b`` (1.6e19) overflow a long;
+        the PMI multiplies doubles instead and stays finite and exact."""
+        import math
+
+        from feature_engineering_tk_spark.functions.text import _pmi
+
+        n, pair, c_a, c_b = 5_000_000_000, 4_000_000_000, 4_000_000_000, 4_000_000_000
+        row = spark.createDataFrame(
+            [(n, pair, c_a, c_b)], "_n long, n_cooccur long, c_a long, c_b long"
+        ).select(_pmi("_n", "n_cooccur", "c_a", "c_b").alias("pmi")).first()
+        want = math.log(float(n) * float(pair) / (float(c_a) * float(c_b)))
+        assert math.isfinite(row["pmi"])
+        assert row["pmi"] == pytest.approx(want, rel=1e-12)
+
     def test_topk_ordering_and_window_validation(self, spark):
         from feature_engineering_tk_spark.functions.text import skipgram_cooccurrence
 

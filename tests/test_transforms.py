@@ -18,6 +18,7 @@ from feature_engineering_tk_spark.transforms.encode import (
     LabelEncoder,
     OneHotEncoder,
     OrdinalEncoder,
+    TargetEncoder,
 )
 from feature_engineering_tk_spark.transforms.impute import Imputer
 from feature_engineering_tk_spark.transforms.outliers import OutlierDetector
@@ -249,3 +250,42 @@ def test_save_load_transformers_bundle(spark, tmp_path):
     a = sc.transform(imp.transform(df)).orderBy("w").toPandas()
     b = back["scaler"].transform(back["imputer"].transform(df)).orderBy("w").toPandas()
     pd.testing.assert_frame_equal(a, b)
+
+
+# ------------------------------------------------------- Spark jobs per fit
+@pytest.mark.parametrize(
+    "fit, max_jobs",
+    [
+        (lambda df: LabelEncoder().fit(df, "role"), 2),
+        (lambda df: OneHotEncoder().fit(df, "tool"), 2),
+        (lambda df: Scaler("standard").fit(df, ["score", "turn_idx"]), 2),
+        (lambda df: TargetEncoder(smoothing=10.0).fit(df, "tool", "label"), 2),
+        (lambda df: QuantileBinner(bins=10).fit(df, "tokens"), 6),
+        (lambda df: Imputer("median").fit(df, ["latency_ms", "score"]), 6),
+    ],
+    ids=["label", "onehot", "standard_scale", "target", "quantile_bin", "median_impute"],
+)
+def test_fit_spark_jobs(transcripts, spark_jobs, fit, max_jobs):
+    """Each vocabulary and moment fit is one action (one aggregate
+    exchange, at most two jobs under AQE); exact quantiles are one
+    range sort, read back from its cache."""
+    _, jobs = spark_jobs(lambda: fit(transcripts))
+    assert jobs <= max_jobs
+
+
+def test_vocab_is_spark_string_order_and_sees_null(spark, spark_jobs):
+    """The driver-side sort of the vocabulary equals Spark's
+    ``orderBy`` (UTF-8 byte order == code-point order) on non-ASCII
+    values, and ``has_null`` comes from the same single action. The
+    emoji (U+1F600) sorts after U+FF01 by code point, but before it in
+    UTF-16 (Java ``String``) order."""
+    vals = ["é", "Z", "a", "中", "\U0001F600", "\uff01", "ab", "Éa", None, "a"]
+    df = spark.createDataFrame([(v,) for v in vals], "c string").cache()
+    df.count()
+    enc, jobs = spark_jobs(lambda: LabelEncoder().fit(df, "c"))
+    want = [r["c"] for r in df.filter("c IS NOT NULL").distinct().orderBy("c").collect()]
+    assert enc.state_["vocab"] == want
+    assert enc.state_["has_null"] is True
+    assert jobs <= 2
+    assert OneHotEncoder().fit(df, "c").state_["vocab"] == want
+    df.unpersist()
