@@ -58,10 +58,10 @@ def _flagged(df: DataFrame, score: str, label: str) -> DataFrame:
     )
 
 
-def _cumulative(df: DataFrame, score: str, label: str, checkpoint: bool = True) -> DataFrame:
+def _cumulative(df: DataFrame, score: str, label: str) -> DataFrame:
     """Distinct-score table with prefix sums: (_v, _ca, _cb, _cum_a,
     _cum_b) where a=positives, b=negatives, cumulative = count ≤ _v."""
-    return _two_sided_cumulative(_flagged(df, score, label), "_x", "_s", checkpoint=checkpoint)
+    return _two_sided_cumulative(_flagged(df, score, label), "_x", "_s")
 
 
 def _require_both_classes(agg_row, op: str) -> tuple[int, int]:

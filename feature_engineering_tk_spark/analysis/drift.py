@@ -257,9 +257,7 @@ def psi_from_sketches(
     return _psi_from_counts(counts, n_bins, eps)
 
 
-def _two_sided_cumulative(
-    df: DataFrame, value: str, flag: str, checkpoint: bool = True
-) -> DataFrame:
+def _two_sided_cumulative(df: DataFrame, value: str, flag: str) -> DataFrame:
     """Distinct-value table with range-partitioned prefix sums of both
     slices' counts: (v, ca, cb, cum_a, cum_b). Same pid-offset pattern
     as stats._average_ranks — no unpartitioned window anywhere.
@@ -267,9 +265,7 @@ def _two_sided_cumulative(
     The shuffled count table is persisted only for the duration of this
     call (try/finally, as in ``stats._average_ranks``): the result is
     eagerly localCheckpoint-ed, then the cache is dropped — repeated
-    calls in a long session leave no cached blocks behind.
-    ``checkpoint=False`` keeps the lazy plan (used by the plan audit to
-    inspect the window shape)."""
+    calls in a long session leave no cached blocks behind."""
     sess = df.sparkSession
     vc = df.groupBy(F.col(value).alias("_v")).agg(
         F.sum((F.col(flag) == "a").cast("bigint")).alias("_ca"),
@@ -300,12 +296,9 @@ def _two_sided_cumulative(
             (F.sum("_ca").over(w) + off_a[F.col("_pid")]).alias("_cum_a"),
             (F.sum("_cb").over(w) + off_b[F.col("_pid")]).alias("_cum_b"),
         )
-        if checkpoint:
-            cum = cum.localCheckpoint(eager=True)  # cut lineage off the persisted shuffle
-        return cum
+        return cum.localCheckpoint(eager=True)  # cut lineage off the persisted shuffle
     finally:
-        if checkpoint:
-            vc.unpersist()
+        vc.unpersist()
 
 
 def ks_statistic_df(a: DataFrame, b: DataFrame, column: str) -> DataFrame:

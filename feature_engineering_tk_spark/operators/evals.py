@@ -103,9 +103,9 @@ def head_to_head(
 
 
 def _mm_step(pairs: DataFrame, record: DataFrame, ratings: DataFrame, scale: int) -> DataFrame:
-    """One exact-integer Hunter-MM update (exposed for the plan audit):
-    ratings broadcast onto the pairs table twice, one map-side-combined
-    ``groupBy(model)``, scalar total broadcast back."""
+    """One exact-integer Hunter-MM update: ratings broadcast onto the
+    pairs table twice, one map-side-combined ``groupBy(model)``, scalar
+    total broadcast back."""
     ri = F.broadcast(ratings.withColumnRenamed("model", "_mi").withColumnRenamed("p", "_pi"))
     rj = F.broadcast(ratings.withColumnRenamed("model", "_mj").withColumnRenamed("p", "_pj"))
     denom = (

@@ -1063,7 +1063,8 @@ def merge_adjacent_turns(
     (gaps-and-islands via a running sum of role-change flags); the
     follow-up ``groupBy(conv_id, run)`` clusters on a SUPERSET of the
     window's partition key, so Catalyst reuses the same exchange — one
-    conversation-key shuffle total (plan-audited in docs/PLANS.md).
+    conversation-key shuffle total (``tests/test_transcripts.py``
+    ``test_single_exchange_plan``).
     Texts concatenate inside per-run aggregation; whole conversations
     never assemble on one task beyond their own rows.
     """

@@ -147,8 +147,7 @@ def write_bucketed(
     ingest pays that shuffle exactly once — every later job's scan
     comes out already hash-clustered on the key, so equi-joins between
     two tables bucketed with the SAME count and groupBys on the bucket
-    key plan with ZERO Exchange nodes (verified in the plan audit /
-    ``tests/test_bucketed.py``).  ``sort_by`` (defaults to ``keys``)
+    key plan with ZERO Exchange nodes (``tests/test_bucketed.py``).  ``sort_by`` (defaults to ``keys``)
     additionally sorts within buckets, letting sort-merge joins skip
     the per-task sort when files align.
 

@@ -68,8 +68,11 @@ class OutlierDetector(FittedStateMixin):
         for c in columns:
             if self.method == "iqr":
                 q1, q3 = row[f"{c}__q1"], row[f"{c}__q3"]
-                iqr = q3 - q1
-                bounds[c] = {"lo": q1 - self.factor * iqr, "hi": q3 + self.factor * iqr}
+                if q1 is None or q3 is None:  # all-null skip
+                    bounds[c] = None
+                else:
+                    iqr = q3 - q1
+                    bounds[c] = {"lo": q1 - self.factor * iqr, "hi": q3 + self.factor * iqr}
             elif self.method == "mad":
                 med = row[f"{c}__med"]
                 mad = mads.get(f"{c}__mad")

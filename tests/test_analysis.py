@@ -490,14 +490,12 @@ def test_ann_corpus_partition_pruning(spark, tmp_path):
     """write_ann_corpus + ann_corpus_topk: the bucket predicate must
     reach the scan as a PARTITION filter (pruned I/O), and results must
     equal lsh_topk on the unmaterialized corpus."""
-    import io
-    from contextlib import redirect_stdout
-
     from feature_engineering_tk_spark.functions.similarity import (
         ann_corpus_topk,
         lsh_topk,
         write_ann_corpus,
     )
+    from feature_engineering_tk_spark.plans.inspect import inspect
 
     rng = np.random.default_rng(4)
     vecs = rng.standard_normal((300, 16))
@@ -510,11 +508,8 @@ def test_ann_corpus_partition_pruning(spark, tmp_path):
 
     q = [float(x) for x in vecs[0]]
     got = ann_corpus_topk(spark, path, q, k=5, dim=16, n_bits=4)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        got.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan and "lsh_bucket" in plan
+    scans = inspect(got).scans
+    assert scans and all("lsh_bucket" in s.partition_filters for s in scans), scans
 
     got_rows = [(r["vec_id"], round(r["cosine_sim"], 9)) for r in got.collect()]
     exp_rows = [

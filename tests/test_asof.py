@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from feature_engineering_tk_spark.operators.asof import asof_join, asof_join_broadcast
+from feature_engineering_tk_spark.plans.inspect import inspect
 
 
 @pytest.fixture(scope="module")
@@ -65,6 +66,12 @@ def test_asof_broadcast_variant(asof_frames):
     assert np.allclose(
         got["tokens_asof"].astype(float), exp["tokens_asof"].astype(float), equal_nan=True
     )
+
+
+def test_asof_broadcast_variant_broadcasts(asof_frames):
+    left, right, _, _ = asof_frames
+    plan = inspect(asof_join_broadcast(left, right, entity="conv_id", value_cols=["tokens"]))
+    assert plan.broadcasts >= 1 and "BroadcastHashJoinExec" in plan.joins, plan
 
 
 def test_asof_tolerance(asof_frames):
@@ -227,35 +234,20 @@ def test_asof_packed_missing_entity_is_null(spark):
 
 def test_asof_packed_reuses_left_partitioning(spark, transcripts):
     """Pre-partitioned left side: dropped onto a window-feature stack the
-    packed as-of must add NO exchange on the big left side — the left
-    branch of the plan keeps exactly the window's single conv_id
-    exchange (the union-tag path re-shuffles everything instead)."""
+    packed as-of must add NO shuffle to what the stack alone plans (the
+    union-tag path re-shuffles everything instead)."""
     from feature_engineering_tk_spark.operators import window_features as W
-    from feature_engineering_tk_spark.operators.asof import asof_join, asof_join_packed
+    from feature_engineering_tk_spark.operators.asof import asof_join_packed
 
     feat = W.rolling_agg(transcripts, "tokens", "mean", 3)
     tools = transcripts.filter(F.col("tool").isNotNull()).select("conv_id", "ts", "tool")
 
-    packed_plan = (
-        asof_join_packed(feat, tools, value_cols=["tool"])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    union_plan = (
-        asof_join(feat, tools, value_cols=["tool"])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    import re
-
-    def shuffles(plan):
-        return len(re.findall(r"Exchange hashpartitioning", plan))
-
-    # union path: window exchange + union re-shuffle; packed path: the
-    # window exchange + the entity-sized packed aggregation only — and
-    # the left (fat) side appears under exactly one exchange
-    assert shuffles(packed_plan) <= shuffles(union_plan)
-    # the window's exchange is the ONLY one whose input scans transcripts
-    # via the left branch: no second hashpartitioning over the feature table
-    assert packed_plan.count("Window") >= 1
+    stack = inspect(feat)
+    packed = inspect(asof_join_packed(feat, tools, value_cols=["tool"]))
+    union = inspect(asof_join(feat, tools, value_cols=["tool"]))
+    assert packed.shuffles == stack.shuffles, packed
+    assert len(packed.shuffles) < len(union.shuffles), union
+    assert packed.windows, packed
 
 
 def _oracle_directed(left_pdf, right_pdf, direction, tolerance=None):
@@ -328,18 +320,15 @@ def test_directed_requires_future_opt_in(asof_frames):
 
 
 def test_directed_single_exchange(asof_frames):
-    """nearest = ONE exchange (two sorts over it), same shuffle cost
-    class as the backward union-tag path."""
-    import re
-
+    """Every direction of the union-tag as-of is ONE shuffle and no join
+    node (nearest runs two sorts over its one exchange)."""
     left, right, _, _ = asof_frames
-    plan = (
-        asof_join(
-            left, right, value_cols=["tokens"], direction="nearest",
-            allow_future=True,
+    for direction in ("backward", "forward", "nearest"):
+        plan = inspect(
+            asof_join(
+                left, right, value_cols=["tokens"], direction=direction,
+                allow_future=True,
+            )
         )
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert len(set(re.findall(r"Exchange hashpartitioning", plan))) <= 1
+        assert len(plan.shuffles) == 1, (direction, plan)
+        assert (plan.joins, plan.broadcasts) == ((), 0), (direction, plan)

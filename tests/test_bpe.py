@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from feature_engineering_tk_spark.functions import bpe
+from feature_engineering_tk_spark.plans.inspect import inspect
 
 
 def _ref_bpe(word_counts: dict[str, int], num_merges: int):
@@ -172,5 +173,4 @@ def test_training_plan_is_vocab_sized(docs):
     to documents, no window over the corpus)."""
     vocab = bpe.word_frequency_table(docs, "text")
     assert vocab.count() == len(_word_counts())
-    plan = vocab._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" in plan  # one hash-partial groupBy, nothing else
+    assert inspect(vocab).shuffles  # one hash-partial groupBy, nothing else

@@ -373,12 +373,12 @@ def test_bm25_topk_filters_tokens_at_scan(spark):
     """The token explode is filtered to query-term literals before the
     aggregate — non-query tokens never reach a shuffle."""
     from feature_engineering_tk_spark.functions.text import bm25_topk
+    from feature_engineering_tk_spark.plans.inspect import inspect
 
     docs = spark.createDataFrame(
         [(1, "a b c"), (2, "a d e")], "doc_id bigint, text string"
     )
-    plan = bm25_topk(docs, "a", k=2)._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
+    assert "TakeOrderedAndProject" in inspect(bm25_topk(docs, "a", k=2)).nodes
 
 
 class TestTruncationArtifacts:

@@ -10,6 +10,7 @@ from feature_engineering_tk_spark.functions.clustering import (
     cluster_sizes,
     kmeans,
 )
+from feature_engineering_tk_spark.plans.inspect import inspect
 
 
 @pytest.fixture(scope="module")
@@ -58,8 +59,8 @@ def test_assignment_is_shuffle_free(blobs):
         blobs.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding")),
         [(0, [5.0, 0.0, 0.0]), (1, [0.0, 5.0, 0.0])],
     )
-    plan = assigned._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    plan = inspect(assigned)
+    assert (plan.shuffles, plan.broadcasts) == ((), 0), plan
 
 
 def test_cluster_sizes(blobs):

@@ -350,10 +350,11 @@ class TestFuzzyPairs:
 
     def test_distance_runs_in_jvm(self, spark):
         from feature_engineering_tk_spark.operators.dedup import fuzzy_pairs
+        from feature_engineering_tk_spark.plans.inspect import inspect
 
         df = spark.createDataFrame([(1, "ab"), (2, "ac")], "doc_id long, text string")
-        plan = fuzzy_pairs(df)._jdf.queryExecution().executedPlan().toString()
-        assert "levenshtein" in plan and "BatchEvalPython" not in plan
+        plan = inspect(fuzzy_pairs(df))
+        assert "levenshtein" in plan.functions and plan.python == (), plan
 
 
 class TestSourceOverlap:

@@ -11,6 +11,7 @@ from feature_engineering_tk_spark.functions.embeddings import (
     pca_components,
     pca_project,
 )
+from feature_engineering_tk_spark.plans.inspect import inspect
 
 
 @pytest.fixture(scope="module")
@@ -61,8 +62,8 @@ def test_projection_matches_numpy_and_is_shuffle_free(data):
     expect = (x - x.mean(axis=0)) @ comps.T
     for i in range(200):
         np.testing.assert_allclose(got[i], expect[i], rtol=1e-6, atol=1e-9)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    plan = inspect(out)
+    assert (plan.shuffles, plan.broadcasts) == ((), 0), plan
 
 
 class TestAnnRecall:

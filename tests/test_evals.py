@@ -526,13 +526,14 @@ def test_preference_pairs_argmax_margin_and_guards(spark):
 
 def test_preference_pairs_single_exchange(spark):
     from feature_engineering_tk_spark.operators.evals import preference_pairs
+    from feature_engineering_tk_spark.plans.inspect import inspect
 
     df = spark.createDataFrame(
         [("p", "r1", 0.1), ("p", "r2", 0.9)],
         "prompt_id string, response_id string, score double",
     )
-    plan = preference_pairs(df)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") <= 1  # one groupBy shuffle, no window/join
+    plan = inspect(preference_pairs(df))
+    assert len(plan.shuffles) + plan.broadcasts <= 1, plan  # one groupBy shuffle, no window/join
 
 
 class TestProportionCI:

@@ -109,11 +109,12 @@ def test_on_error_fail_raises(spark):
 def test_parse_plan_is_scan_local(spark):
     """No exchange anywhere in the parse plan: from_json + posexplode
     are row-local — a 100 TB JSONL drop parses at scan speed."""
+    from feature_engineering_tk_spark.plans.inspect import inspect
     from feature_engineering_tk_spark.sources import parse_chat_jsonl
 
     df = spark.createDataFrame([Row(value="{}")])
-    plan = parse_chat_jsonl(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    plan = inspect(parse_chat_jsonl(df))
+    assert (plan.shuffles, plan.broadcasts) == ((), 0), plan
 
 
 def test_streaming_ingest_matches_batch(spark, tmp_path):

@@ -14,6 +14,7 @@ from feature_engineering_tk_spark.exceptions import (
     ValidationError,
 )
 from feature_engineering_tk_spark.functions.logreg import logreg_score, logreg_train
+from feature_engineering_tk_spark.plans.inspect import inspect
 
 
 def _toy(spark, n=400, seed=5, partitions=None):
@@ -69,7 +70,8 @@ def test_logreg_score_is_row_local_expression(spark):
     scored = logreg_score(df, ["x1", "x2"], {"intercept": 0.0, "beta": [1.0, 0.0]})
     row = scored.where(F.col("x1").isNotNull()).first()
     assert row.p == pytest.approx(1.0 / (1.0 + math.exp(-row.x1)), abs=1e-12)
-    assert "Exchange" not in scored._jdf.queryExecution().executedPlan().toString()
+    plan = inspect(scored)
+    assert (plan.shuffles, plan.broadcasts) == ((), 0), plan
 
 
 def test_logreg_null_rows_excluded_and_guards(spark):

@@ -272,10 +272,7 @@ def test_attach_last_tool_matches_asof_join_on_ties_and_edges(spark, tmp_path):
     assert [last[(None, i)] for i in range(2)] == ["n", "n"]
 
 
-def test_backfill_plan_has_one_exchange_and_one_scan(spark, tmp_path):
-    """The four stages over a parquet scan plan ONE conv_id exchange and
-    ONE scan: last_tool rides the window stack's partitioning instead of
-    a self-join that re-scans and re-shuffles the feature table."""
+def _backfill_over_parquet(spark, tmp_path):
     from feature_engineering_tk_spark.datagen import TRANSCRIPT_SCHEMA, generate_transcripts
     from feature_engineering_tk_spark.sources import load_table
 
@@ -284,18 +281,54 @@ def test_backfill_plan_has_one_exchange_and_one_scan(spark, tmp_path):
     cur = load_table(spark, path, schema=TRANSCRIPT_SCHEMA)
     for fn in _job_stages(str(tmp_path / "unused")):
         cur = fn(cur)
-    # AQE would wrap the plan in an AdaptiveSparkPlan that prints its
-    # initial plan alongside the final one
-    conf = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(conf)
-    spark.conf.set(conf, "false")
-    try:
-        plan = cur._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set(conf, prev)
-    assert plan.count("Exchange hashpartitioning(conv_id") == 1, plan
-    assert plan.count("FileScan") == 1, plan
-    assert "Union" not in plan, plan
+    return cur
+
+
+def test_backfill_plan_has_one_exchange_and_one_scan(spark, tmp_path):
+    """The four stages over a parquet scan plan ONE conv_id exchange and
+    ONE scan: last_tool rides the window stack's partitioning instead of
+    a self-join that re-scans and re-shuffles the feature table."""
+    from feature_engineering_tk_spark.plans.inspect import Shuffle, inspect
+
+    plan = inspect(_backfill_over_parquet(spark, tmp_path))
+    assert plan.shuffles == (Shuffle("HashPartitioning", ("conv_id",)),), plan
+    assert plan.broadcasts == 0 and plan.joins == (), plan
+    assert len(plan.scans) == 1, plan
+    assert "Union" not in plan.nodes, plan
+
+
+def test_backfill_plan_reads_no_future_rows(spark, spark_jobs, tmp_path):
+    """Point-in-time on the shipped job's plan: every window frame ends
+    at the current row or before it (a lag's offset frame ends at -1 or
+    before), and every window orders ascending, so no feature reads a
+    later turn. Reading the plan runs no Spark job."""
+    from feature_engineering_tk_spark.plans.inspect import Frame, inspect
+
+    cur = _backfill_over_parquet(spark, tmp_path)
+    plan, jobs = spark_jobs(lambda: inspect(cur))
+    assert jobs == 0
+    assert plan.windows, plan
+    for w in plan.windows:
+        assert w.upper <= (-1 if w.function == "lag" else 0), w
+        assert all(w.ascending), w
+    # tokens_roll_mean5: the five rows ending at the current one
+    assert Frame("avg", "RowFrame", -4, 0, (True, True)) in plan.windows, plan
+
+
+def test_load_table_scan_pushes_filter_and_prunes_columns(spark, transcripts, tmp_path):
+    """A filter and a 2-column select over a parquet ``load_table`` are
+    pushed into the scan: the filter reaches the reader and the scan
+    reads only the two columns."""
+    from feature_engineering_tk_spark.datagen import TRANSCRIPT_SCHEMA
+    from feature_engineering_tk_spark.plans.inspect import inspect
+    from feature_engineering_tk_spark.sources import load_table
+
+    path = str(tmp_path / "tbl")
+    transcripts.write.parquet(path)
+    df = load_table(spark, path, schema=TRANSCRIPT_SCHEMA)
+    (scan,) = inspect(df.filter(F.col("tokens") > 10).select("conv_id", "tokens")).scans
+    assert "GreaterThan(tokens,10)" in scan.pushed_filters, scan
+    assert scan.read_schema == "struct<conv_id:string,tokens:bigint>", scan
 
 
 def test_dataset_fingerprint_order_invariant(spark):
@@ -336,6 +369,7 @@ def test_feature_job_bucket_output_naming(spark, tmp_path):
 
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "jobs"))
     from feature_engineering_tk_spark.datagen import generate_transcripts
+    from feature_engineering_tk_spark.plans.inspect import inspect
     from jobs.feature_job import build_pipeline, register_bucketed
 
     df = generate_transcripts(spark, n_convs=30, seed=7)
@@ -348,10 +382,10 @@ def test_feature_job_bucket_output_naming(spark, tmp_path):
     j = t.hint("merge").join(
         t.select("conv_id").distinct().hint("merge"), "conv_id"
     )
-    plan = j._jdf.queryExecution().executedPlan().toString()
+    plan = inspect(j)
     # left side scan comes out pre-clustered; only the derived distinct
     # side may exchange
-    assert plan.count("Exchange") <= 1
+    assert len(plan.shuffles) + plan.broadcasts <= 1, plan
     spark.sql("DROP TABLE IF EXISTS feat_v2_x_bucketed")
 
 

@@ -990,11 +990,13 @@ class TestMergeAdjacentTurns:
             merge_adjacent_turns,
         )
 
+        from feature_engineering_tk_spark.plans.inspect import inspect
+
         df = _tr(spark, [("a", 0, "user", "x", None, 0)])
-        plan = merge_adjacent_turns(df)._jdf.queryExecution().executedPlan().toString()
+        plan = inspect(merge_adjacent_turns(df))
         # the groupBy clusters on a superset of the window key: the
         # window's single conv_id exchange must be the ONLY shuffle
-        assert plan.count("Exchange") <= 1
+        assert len(plan.shuffles) + plan.broadcasts <= 1, plan
 
 
 class TestNearLoops:

@@ -198,6 +198,15 @@ def test_iqr_outlier_flags_match_pandas(transcripts, transcripts_pdf):
     assert (out["tokens_is_outlier"].to_numpy() == exp.to_numpy()).all()
 
 
+def test_iqr_outliers_skip_all_null_column(spark):
+    df = spark.createDataFrame([(1.0, None), (2.0, None)], "a double, z double")
+    det = OutlierDetector("iqr", factor=1.5).fit(df, ["a", "z"])
+    assert det.state_["bounds"]["z"] is None
+    assert det.state_["bounds"]["a"] == OutlierDetector("iqr", factor=1.5).fit(df, ["a"]).state_["bounds"]["a"]
+    assert det.state_["bounds"]["a"] == {"lo": 0.5, "hi": 2.5}
+    assert [r.z_is_outlier for r in det.flag(df).collect()] == [0, 0]
+
+
 def test_zscore_outliers_ddof1_and_zero_std_skip(spark):
     pdf = pd.DataFrame({"x": [1.0, 2.0, 3.0, 100.0], "const": [5.0] * 4})
     df = spark.createDataFrame(pdf)
