@@ -13,9 +13,9 @@ Spark has no native as-of join. Three algorithms share ONE semantics
   entity and a bounded right side: the right side packs to one sorted
   array per entity and joins on the entity key, so the left side is
   never re-shuffled. Backward only.
-- :func:`asof_join_broadcast` — small right sides: broadcast join on
-  the entity key, then the greatest matching row per anchor.
-  Backward only, no tolerance.
+- :func:`asof_join_broadcast` — small right sides: the right side
+  packs to one array per entity and is broadcast, so the left side is
+  never shuffled. Backward only, no tolerance.
 
 The contract all three keep:
 
@@ -33,9 +33,8 @@ The contract all three keep:
 
 ``'forward'`` and ``'nearest'`` read rows after the anchor, so they sit
 behind ``allow_future=True``. They read the future through a
-DESCENDING-ordered window whose frame still ends at the current row: a
-plan-level leak audit has to check sort direction, not only frame
-bounds.
+DESCENDING-ordered window whose frame still ends at the current row,
+so ``Pipeline.run``'s leak audit rejects a descending order key too.
 """
 
 from __future__ import annotations
@@ -172,32 +171,26 @@ def asof_join_broadcast(
     suffix: str = "_asof",
 ) -> DataFrame:
     """Backward as-of join for SMALL right sides (snapshot stats,
-    vocabularies): broadcast null-safe equi-join on entity with
-    ``right.ts <= left.ts``, then the greatest ``(ts, values…)`` struct
-    per left anchor wins — the :func:`asof_join` rule.
+    vocabularies): the right rows are collected into one array per
+    entity and broadcast; each left row takes the greatest
+    ``(ts, values…)`` struct of its entity's array with
+    ``ts <= left.ts`` — the :func:`asof_join` rule.
 
-    No shuffle of the big left side beyond the window partitioning; the
-    right side ships to every executor. Row explosion bounded by
-    right-rows-per-entity — keep the right side aggregated.
+    The big left side is neither shuffled nor exploded: a map-side
+    null-safe equi-join on entity, then a scan of that entity's array
+    per left row — keep the right side aggregated.
     """
     value_cols = value_cols or _default_values(right, entity, right_ts)
-    left_cols = left.columns
-
-    lid = left.withColumn("_lid", F.monotonically_increasing_id())
-    r = right.select(
-        F.col(entity).alias("_re"),
-        _row(epoch_micros(F.col(right_ts)), value_cols).alias("_r"),
+    r = right.groupBy(F.col(entity).alias("_re")).agg(
+        F.collect_list(_row(epoch_micros(F.col(right_ts)), value_cols)).alias("_rs")
     )
-    joined = lid.join(
-        F.broadcast(r),
-        lid[entity].eqNullSafe(r["_re"]) & (r["_r._k"] <= epoch_micros(F.col(left_ts))),
-        "left",
-    )
-    w = Window.partitionBy("_lid").orderBy(F.col("_r").desc_nulls_last())
-    picked = joined.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
-    return picked.select(
-        *[F.col(c) for c in left_cols],
-        *[F.col("_r")[c].alias(f"{c}{suffix}") for c in value_cols],
+    joined = left.join(F.broadcast(r), left[entity].eqNullSafe(r["_re"]), "left")
+    t = epoch_micros(F.col(left_ts))
+    # NULL when the entity has no right row at or before t
+    pick = F.array_max(F.filter("_rs", lambda x: x["_k"] <= t))
+    return joined.select(
+        *[F.col(c) for c in left.columns],
+        *[pick[c].alias(f"{c}{suffix}") for c in value_cols],
     )
 
 

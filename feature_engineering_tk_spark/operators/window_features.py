@@ -15,11 +15,13 @@ semantics grafted here:
   (``feature_engineering.py:576-627``): the group statistic broadcast
   back onto every row (pandas ``std`` is ddof=1 → ``stddev_samp``).
 
-Leakage contract: every helper here builds frames that END AT THE
-CURRENT ROW (``rowsBetween(lo, 0)`` / ``rangeBetween(lo, 0)``) unless
-explicitly marked future-reading (``with_lead``, ``backward_fill``),
-which callers must opt into with ``allow_future=True`` when assembling
-a leakage-free pipeline (see ``plans.pipeline.strict_no_future``).
+Leakage contract: every helper here builds ascending frames that END
+AT THE CURRENT ROW (``rowsBetween(lo, 0)`` / ``rangeBetween(lo, 0)``)
+except ``with_lead``, ``backward_fill`` (both behind
+``allow_future=True``), ``interpolate_linear`` and ``group_transform``.
+``Pipeline.run``'s leak audit (``plans/pipeline.py``) rejects those
+frames whatever flag was passed; it cannot see into ``rolling_median``
+(a pandas UDF) or ``group_transform_join`` (aggregate-then-join).
 """
 
 from __future__ import annotations
@@ -272,7 +274,6 @@ def interpolate_linear(
     cols: list[str],
     entity: str = "conv_id",
     order: str | list[str] = "turn_idx",
-    allow_future: bool = True,
 ) -> DataFrame:
     """pandas ``interpolate(method='linear')`` parity
     (``preprocessing.py:202-207``), fully in column expressions — two
@@ -282,10 +283,9 @@ def interpolate_linear(
     (p0,v0) and (p1,v1) is ``v0 + (v1-v0)*(p-p0)/(p1-p0)``. Leading
     nulls stay null; trailing nulls carry v0 forward (pandas default
     ``limit_direction='forward'``). Reads the NEXT non-null ⇒ future-
-    reading; interpolation is inherently so (opt-out available).
+    reading; interpolation is inherently so, and ``Pipeline.run``'s leak
+    audit rejects it.
     """
-    if not allow_future:
-        raise FutureLeakError("interpolate_linear reads future turns for the right bracket")
     w = entity_window(entity, order)
     wp = w.rowsBetween(Window.unboundedPreceding, 0)
     wf = w.rowsBetween(0, Window.unboundedFollowing)

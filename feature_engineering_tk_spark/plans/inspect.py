@@ -4,7 +4,9 @@
 into ``AdaptiveSparkPlanExec.executedPlan()`` and each query stage's
 ``plan()``, and never parses the plan's text. It plans the query but
 runs no Spark job. A cached relation is one leaf: its own exchanges
-were paid when it was cached, so they are not counted here."""
+were paid when it was cached, so they are not counted here.
+``window_frames`` reads only the analyzed plan's window frames: cheap
+enough for ``Pipeline.run``'s leak audit."""
 
 from __future__ import annotations
 
@@ -46,7 +48,6 @@ class Plan:
     broadcasts: int
     scans: tuple[Scan, ...]
     joins: tuple[str, ...]  # node classes, e.g. "BroadcastHashJoinExec"
-    windows: tuple[Frame, ...]
     python: tuple[str, ...]  # Python-eval nodes, e.g. "ArrowEvalPython"
     functions: frozenset[str]  # every expression's name, e.g. "levenshtein"
 
@@ -64,6 +65,8 @@ _BOUNDS = {"UnboundedPreceding": -math.inf, "CurrentRow": 0.0, "UnboundedFollowi
 
 def _bound(e) -> float:
     kind = _cls(e)
+    if kind == "Cast":  # the analyzed plan casts a RANGE bound to a non-long order key's type
+        return _bound(e.child())
     return _BOUNDS[kind] if kind in _BOUNDS else float(e.value())
 
 
@@ -82,8 +85,21 @@ def _add_functions(e, out: set) -> None:
         _add_functions(c, out)
 
 
+def window_frames(df) -> tuple[Frame, ...]:
+    """One ``Frame`` per window expression of ``df``'s analyzed plan,
+    over its whole lineage. Runs no Spark job."""
+    frames, stack = [], [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Window":
+            ascending = tuple(o.isAscending() for o in _seq(node.orderSpec()))
+            frames += [_frame(w, ascending) for w in _seq(node.windowExpressions())]
+        stack += _seq(node.children())
+    return tuple(frames)
+
+
 def inspect(df) -> Plan:
-    nodes, shuffles, scans, joins, windows, python, functions = [], [], [], [], [], [], set()
+    nodes, shuffles, scans, joins, python, functions = [], [], [], [], [], set()
     broadcasts = 0
     stack = [df._jdf.queryExecution().executedPlan()]
     while stack:
@@ -110,13 +126,10 @@ def inspect(df) -> Plan:
             scans.append(Scan(*(meta.apply(k) for k in ("PushedFilters", "PartitionFilters", "ReadSchema"))))
         elif kind.endswith("JoinExec") or kind == "CartesianProductExec":
             joins.append(kind)
-        elif kind == "WindowExec":
-            ascending = tuple(o.isAscending() for o in _seq(node.orderSpec()))
-            windows += [_frame(w, ascending) for w in _seq(node.windowExpression())]
         elif node.getClass().getName().startswith("org.apache.spark.sql.execution.python."):
             python.append(node.nodeName())
         if kind != "ReusedExchangeExec":  # the exchange it reuses is walked once
             stack += _seq(node.children())
     return Plan(
-        tuple(nodes), tuple(shuffles), broadcasts, tuple(scans), tuple(joins), tuple(windows), tuple(python), frozenset(functions)
+        tuple(nodes), tuple(shuffles), broadcasts, tuple(scans), tuple(joins), tuple(python), frozenset(functions)
     )

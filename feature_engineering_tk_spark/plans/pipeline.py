@@ -28,10 +28,15 @@ mid-run. A checkpoint is reused only if the names and params of it and
 every stage before it, and its location, match this run; otherwise it
 is recomputed.
 
-Leakage guard: inside ``strict_no_future()`` every future-reading
-window helper raises even when the caller passes ``allow_future=True``
-— wrap the whole feature job in it for the zero-temporal-leakage
-contract.
+Leak audit (zero temporal leakage): before ``run`` writes a stage, and
+on the lazy frame it returns, it reads the window frames of the plan
+since the last write (no Spark job) and raises ``FutureLeakError`` on
+one that reads a later row: an upper bound past CURRENT ROW, or a
+descending order key (forward and nearest as-of). The record gets
+``leak_audit``, the number of frames checked. Not seen: a future read
+outside the frames, by a grouped pandas UDF (``rolling_median``), an
+aggregate joined back (``group_transform_join``) or a size-based rank
+(``ntile``).
 """
 
 from __future__ import annotations
@@ -41,32 +46,32 @@ import os
 import time
 import uuid
 from collections.abc import Callable
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from feature_engineering_tk_spark.operators import window_features as W
+from feature_engineering_tk_spark.operators.window_features import FutureLeakError
 from feature_engineering_tk_spark.plans import metrics as M
+from feature_engineering_tk_spark.plans.inspect import Frame, window_frames
 from feature_engineering_tk_spark.sources import load_table, write_table
 
 PARTITION_COL = "ds"
 
 
-@contextmanager
-def strict_no_future():
-    """While active, with_lead/backward_fill raise FutureLeakError even
-    with allow_future=True (pipeline-level zero-leakage invariant)."""
-    orig_lead, orig_bfill = W.with_lead, W.backward_fill
+def reads_future(frame: Frame) -> bool:
+    """The frame reads a row after the current one: its upper bound is
+    past CURRENT ROW, or an order key sorts descending."""
+    return frame.upper > 0 or not all(frame.ascending)
 
-    def deny(*_a, **_k):
-        raise W.FutureLeakError("future-reading operator inside strict_no_future pipeline")
 
-    W.with_lead, W.backward_fill = deny, deny
-    try:
-        yield
-    finally:
-        W.with_lead, W.backward_fill = orig_lead, orig_bfill
+def _leak_audit(stage: str, df: DataFrame) -> int:
+    """Raise ``FutureLeakError`` if a window frame of ``df`` reads the
+    future; else the number of frames checked."""
+    frames = window_frames(df)
+    leaks = [f for f in frames if reads_future(f)]
+    if leaks:
+        raise FutureLeakError(f"stage {stage!r} reads rows after the current one: {leaks}")
+    return len(frames)
 
 
 @dataclass
@@ -148,7 +153,8 @@ class Pipeline:
         """Run the stages over ``df``. With ``output`` (an ``iceberg:``
         table ref or a parquet path) the last stage is materialized
         there instead of under the workdir: the output is the final
-        checkpoint, written once, and the returned frame reads it."""
+        checkpoint, written once, and the returned frame reads it.
+        Raises ``FutureLeakError`` (the leak audit) before a write."""
         if output is not None and "/" not in output and not output.startswith("iceberg:"):
             # write_table writes a bare name as a parquet dir, but
             # load_table reads a bare "a.b" as a catalog table
@@ -194,6 +200,8 @@ class Pipeline:
             sc.addJobTag(tag)
             try:
                 cur = stage.fn(cur)
+                if path or i == last:
+                    record["leak_audit"] = _leak_audit(stage.name, cur)
                 if path:
                     cur = self._materialize(cur, path, output=path == output)
             finally:

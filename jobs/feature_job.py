@@ -24,8 +24,9 @@ stages), per-task shuffle-read ``skew`` and the checkpoint's written
 changing any of them recomputes.
 
 Features per (conv_id, turn_idx, ts) anchor — every window frame ends
-at the current row, so no feature reads a turn with ts greater than
-the anchor (zero temporal leakage by construction):
+at the current row and sorts ascending, so no feature reads a turn
+with ts greater than the anchor (zero temporal leakage; Pipeline.run
+audits the frames before the write and journals ``leak_audit``):
 
 - session_id        gap-based sessionization (cumulative-sum pattern)
 - turn_gap_s        ts - lag(ts)

@@ -1,5 +1,5 @@
 """Pipeline: lineage journal, checkpoint resume determinism, the output
-as the last checkpoint, leakage guard, skew metrics, salted agg."""
+as the last checkpoint, the leak audit, skew metrics, salted agg."""
 
 import json
 import os
@@ -10,8 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from feature_engineering_tk_spark.operators import window_features as W
+from feature_engineering_tk_spark.operators.asof import asof_join, asof_join_broadcast, asof_join_packed
 from feature_engineering_tk_spark.operators.salted import salted_group_agg
-from feature_engineering_tk_spark.plans.pipeline import Pipeline, strict_no_future
+from feature_engineering_tk_spark.plans.pipeline import Pipeline
 
 
 def _mkpipe(tmp_path, tag):
@@ -95,14 +96,103 @@ def test_pipeline_output_materializes_last_stage(spark, with_ds, tmp_path, monke
     assert (last["event"], last["from_stage"]) == ("resume", "rolling")
 
 
-def test_strict_no_future_blocks_leaks(transcripts):
-    with strict_no_future():
-        with pytest.raises(W.FutureLeakError):
-            W.with_lead(transcripts, "tokens", 1, allow_future=True)
-        with pytest.raises(W.FutureLeakError):
-            W.backward_fill(transcripts, ["score"], allow_future=True)
-    # restored afterwards
-    assert W.with_lead(transcripts, "tokens", 1, allow_future=True) is not None
+def _assert_rejected(spark, df, tmp_path, fn):
+    """``run`` raises FutureLeakError naming the stage ``fn`` runs in,
+    a checkpoint before the output, and writes neither."""
+    pipe = Pipeline(str(tmp_path / "work"))
+    pipe.add("leak", fn, checkpoint=True)
+    pipe.add("tail", lambda d: d)
+    out = tmp_path / "out"
+    with pytest.raises(W.FutureLeakError, match="stage 'leak'"):
+        pipe.run(spark, df, resume=False, output=str(out))
+    assert os.listdir(pipe.workdir) == []
+    assert not out.exists()
+
+
+def test_strict_no_future_blocks_leaks(spark, transcripts, tmp_path):
+    """Pipeline.run's leak audit rejects future-reading stages even when
+    the caller opted in with allow_future=True."""
+    _assert_rejected(
+        spark, transcripts, tmp_path / "lead", lambda d: W.with_lead(d, "tokens", 1, allow_future=True)
+    )
+    _assert_rejected(
+        spark, transcripts, tmp_path / "bfill", lambda d: W.backward_fill(d, ["score"], allow_future=True)
+    )
+
+
+def _tool_calls(df):
+    return df.filter(F.col("tool").isNotNull()).select("conv_id", "ts", "tool")
+
+
+FUTURE_READS = {
+    "interpolate_linear": lambda d: W.interpolate_linear(d, ["score"]),
+    "asof_forward": lambda d: asof_join(
+        d, _tool_calls(d), value_cols=["tool"], direction="forward", allow_future=True
+    ),
+    "asof_nearest": lambda d: asof_join(
+        d, _tool_calls(d), value_cols=["tool"], direction="nearest", allow_future=True
+    ),
+    "rolling_rows_0_1": lambda d: d.withColumn(
+        "x", F.avg("tokens").over(W.entity_window().rowsBetween(0, 1))
+    ),
+    # turn_idx is an int: the analyzed plan casts the RANGE bounds to it
+    "range_turn_idx_0_3": lambda d: d.withColumn(
+        "x", F.sum("tokens").over(W.entity_window().rangeBetween(0, 3))
+    ),
+    "group_transform": lambda d: W.group_transform(d, ["conv_id"], "tokens", ["mean"]),
+    "raw_lead": lambda d: d.withColumn("x", F.lead("tokens").over(W.entity_window())),
+}
+
+
+@pytest.mark.parametrize("name", FUTURE_READS)
+def test_leak_audit_rejects_future_reads(spark, transcripts, tmp_path, name):
+    """A frame that ends after the current row, or a descending order
+    key (forward and nearest as-of), fails the audit."""
+    _assert_rejected(spark, transcripts, tmp_path, FUTURE_READS[name])
+
+
+PAST_ONLY = {
+    "asof_backward": lambda d: asof_join(d, _tool_calls(d), value_cols=["tool"]),
+    "asof_packed": lambda d: asof_join_packed(
+        W.with_lag(d, "tokens"), _tool_calls(d), value_cols=["tool"]
+    ),
+    "asof_broadcast": lambda d: asof_join_broadcast(
+        W.with_lag(d, "tokens"), _tool_calls(d), value_cols=["tool"]
+    ),
+    "rolling_zscore": lambda d: W.rolling_zscore(d, "tokens"),
+    "context_window": lambda d: W.context_window(d, "text"),
+    "rows_since_event": lambda d: W.rows_since_event(d, F.col("tool").isNotNull()),
+    "rolling_time_agg": lambda d: W.rolling_time_agg(d, "tokens"),
+    "range_turn_idx_3_0": lambda d: d.withColumn(
+        "x", F.sum("tokens").over(W.entity_window().rangeBetween(-3, 0))
+    ),
+    "with_ewma": lambda d: W.with_ewma(d, "tokens", 0.3),
+    "expanding_impute": lambda d: W.expanding_impute(d, ["score"]),
+}
+
+
+@pytest.mark.parametrize("name", ["build_pipeline", *PAST_ONLY])
+def test_leak_audit_passes_past_only_stages(spark, spark_jobs, transcripts, tmp_path, name):
+    """The shipped job's four stages and every past-only operator pass
+    the audit, which runs no Spark job; the audited stage's journal
+    record counts the frames it checked. (The packed and broadcast
+    as-of joins have no window of their own: they run here at the end
+    of a window stack, as in a feature job.)"""
+    if name == "build_pipeline":
+        import sys
+
+        sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "jobs"))
+        from jobs.feature_job import build_pipeline
+
+        pipe = build_pipeline(str(tmp_path / "work"), gap_seconds=1800.0)
+        pipe.stages[-1].checkpoint = False  # stay lazy: nothing runs
+    else:
+        pipe = Pipeline(str(tmp_path / "work")).add(name, PAST_ONLY[name])
+    _, jobs = spark_jobs(lambda: pipe.run(spark, transcripts, resume=False))
+    assert jobs == 0
+    records = [json.loads(line) for line in open(pipe.journal_path)]
+    assert not any("leak_audit" in r for r in records[:-1])
+    assert records[-1]["leak_audit"] >= 1, records[-1]
 
 
 def test_entity_skew_detects_hot_keys(spark, tmp_path):

@@ -1,7 +1,8 @@
 """One plan reader: ``plans/inspect.py`` is the only file of the engine,
-its jobs, scripts and tests that reads a physical plan. Every other
-file asks it for typed facts instead of calling ``queryExecution``,
-``executedPlan`` or ``explain`` and grepping the printed plan.
+its jobs, scripts and tests that reads a plan. Every other file asks
+it for typed facts instead of calling ``queryExecution``,
+``executedPlan``, ``logicalPlan`` or ``explain`` and grepping the
+printed plan.
 
 Calls are found on the source (AST), so a docstring that names them
 does not count."""
@@ -13,7 +14,7 @@ import warnings
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DIRS = ("tests", "feature_engineering_tk_spark", "jobs", "scripts")
 READER = os.path.join("feature_engineering_tk_spark", "plans", "inspect.py")
-PLAN_CALLS = {"queryExecution", "executedPlan", "explain"}
+PLAN_CALLS = {"queryExecution", "executedPlan", "explain", "logicalPlan"}
 
 
 def _sources():

@@ -298,21 +298,20 @@ def test_backfill_plan_has_one_exchange_and_one_scan(spark, tmp_path):
 
 
 def test_backfill_plan_reads_no_future_rows(spark, spark_jobs, tmp_path):
-    """Point-in-time on the shipped job's plan: every window frame ends
-    at the current row or before it (a lag's offset frame ends at -1 or
-    before), and every window orders ascending, so no feature reads a
-    later turn. Reading the plan runs no Spark job."""
-    from feature_engineering_tk_spark.plans.inspect import Frame, inspect
+    """Point-in-time on the shipped job's plan, by the rule
+    ``Pipeline.run`` audits: no window frame reads a later turn, and a
+    lag's offset frame ends at -1 or before. Reading the frames runs no
+    Spark job."""
+    from feature_engineering_tk_spark.plans.inspect import Frame, window_frames
+    from feature_engineering_tk_spark.plans.pipeline import reads_future
 
     cur = _backfill_over_parquet(spark, tmp_path)
-    plan, jobs = spark_jobs(lambda: inspect(cur))
+    frames, jobs = spark_jobs(lambda: window_frames(cur))
     assert jobs == 0
-    assert plan.windows, plan
-    for w in plan.windows:
-        assert w.upper <= (-1 if w.function == "lag" else 0), w
-        assert all(w.ascending), w
+    assert frames and not [f for f in frames if reads_future(f)], frames
+    assert all(f.upper <= -1 for f in frames if f.function == "lag"), frames
     # tokens_roll_mean5: the five rows ending at the current one
-    assert Frame("avg", "RowFrame", -4, 0, (True, True)) in plan.windows, plan
+    assert Frame("avg", "RowFrame", -4, 0, (True, True)) in frames, frames
 
 
 def test_load_table_scan_pushes_filter_and_prunes_columns(spark, transcripts, tmp_path):
