@@ -15,6 +15,9 @@ semantics grafted here:
   (``feature_engineering.py:576-627``): the group statistic broadcast
   back onto every row (pandas ``std`` is ddof=1 → ``stddev_samp``).
 
+``session_index`` and ``turn_gap`` are the ``Column`` forms of
+``sessionize`` and ``with_turn_gap``, for features declared as columns.
+
 Leakage contract: every helper here builds ascending frames that END
 AT THE CURRENT ROW (``rowsBetween(lo, 0)`` / ``rangeBetween(lo, 0)``)
 except ``with_lead``, ``backward_fill`` (both behind
@@ -26,14 +29,18 @@ frames whatever flag was passed; it cannot see into ``rolling_median``
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from feature_engineering_tk_spark.functions.timeutil import epoch_micros, epoch_seconds
+from feature_engineering_tk_spark.functions.timeutil import epoch_micros
 
 
 class FutureLeakError(ValueError):
-    """Raised when a future-reading operator is used without opting in."""
+    """Raised when a future-reading operator is used without opting in,
+    and by ``Pipeline.run``'s plan audit on a frame that reads the future."""
 
 
 def entity_window(entity: str = "conv_id", order: str | list[str] = "turn_idx") -> WindowSpec:
@@ -83,6 +90,28 @@ def with_lead(
     return df.withColumn(out or f"{col}_lead{k}", F.lead(col, k).over(entity_window(entity, order)))
 
 
+def _gap_us(ts: str, w: WindowSpec) -> Column:
+    # integer µs: subtracting two ~1.7e9 epoch doubles would lose ~1e-7 s
+    cur = epoch_micros(ts)
+    return cur - F.lag(cur, 1).over(w)
+
+
+def turn_gap(ts: str, w: WindowSpec) -> Column:
+    """Seconds since the previous row of the unframed window ``w``
+    (NULL on the first), exact as pandas timedelta subtraction is."""
+    return _gap_us(ts, w).cast("double") / F.lit(1_000_000.0)
+
+
+def session_index(ts: str, gap_seconds: float, w: WindowSpec) -> Column:
+    """0-based session index over the unframed window ``w``: the running
+    count of rows whose exact gap to the previous row is NULL or
+    exceeds ``gap_seconds``. Two stacked windows over one sort."""
+    thresh_us = F.lit(int(round(float(gap_seconds) * 1_000_000)))
+    gap = _gap_us(ts, w)
+    is_new = F.when(gap.isNull() | (gap > thresh_us), 1).otherwise(0)
+    return (F.sum(is_new).over(w.rowsBetween(Window.unboundedPreceding, 0)) - 1).cast("long")
+
+
 def with_turn_gap(
     df: DataFrame,
     ts: str = "ts",
@@ -90,15 +119,8 @@ def with_turn_gap(
     order: str | list[str] = "turn_idx",
     out: str = "turn_gap_s",
 ) -> DataFrame:
-    """Seconds since the previous turn in the same conversation (null on
-    the first turn). Differenced in INTEGER microseconds then divided —
-    subtracting two ~1.7e9 epoch doubles first would lose ~1e-7 s to
-    float cancellation (pandas timedelta subtraction is exact, so the
-    allclose contract needs the exact form)."""
-    w = entity_window(entity, order)
-    cur = epoch_micros(ts)
-    gap_us = cur - F.lag(cur, 1).over(w)
-    return df.withColumn(out, gap_us.cast("double") / F.lit(1_000_000.0))
+    """:func:`turn_gap` per ``entity`` in ``order`` (NULL on its first row)."""
+    return df.withColumn(out, turn_gap(ts, entity_window(entity, order)))
 
 
 def rolling_agg(
@@ -290,22 +312,21 @@ def interpolate_linear(
     wp = w.rowsBetween(Window.unboundedPreceding, 0)
     wf = w.rowsBetween(0, Window.unboundedFollowing)
     pos = F.row_number().over(w)
-    out = df.withColumn("_ip_pos", pos)
     updates = {}
     for c in cols:
-        notnull_pos = F.when(F.col(c).isNotNull(), F.col("_ip_pos"))
+        notnull_pos = F.when(F.col(c).isNotNull(), pos)
         v0 = F.last(c, ignorenulls=True).over(wp)
         p0 = F.last(notnull_pos, ignorenulls=True).over(wp)
         v1 = F.first(c, ignorenulls=True).over(wf)
         p1 = F.first(notnull_pos, ignorenulls=True).over(wf)
-        blend = v0 + (v1 - v0) * (F.col("_ip_pos") - p0) / (p1 - p0)
+        blend = v0 + (v1 - v0) * (pos - p0) / (p1 - p0)
         updates[c] = (
             F.when(F.col(c).isNotNull(), F.col(c).cast("double"))
             .when(p0.isNull(), F.lit(None).cast("double"))  # leading nulls
             .when(p1.isNull(), v0.cast("double"))  # trailing → carry forward
             .otherwise(blend)
         )
-    return out.withColumns(updates).drop("_ip_pos")
+    return df.withColumns(updates)
 
 
 def sessionize(
@@ -316,24 +337,10 @@ def sessionize(
     order: str | list[str] | None = None,
     out: str = "session_id",
 ) -> DataFrame:
-    """Gap-based sessionization: a new session starts when the gap since
-    the previous turn exceeds ``gap_seconds``. Classic cumulative-sum
-    pattern — two stacked windows over ONE partition sort (Catalyst
-    reuses the exchange), no Python.
-
-    ``session_id`` is 0-based per entity; first turn of an entity opens
-    session 0.
-    """
-    orders = [ts] if order is None else ([order] if isinstance(order, str) else list(order))
-    w = entity_window(entity, orders)
-    wc = w.rowsBetween(Window.unboundedPreceding, 0)
-    # exact integer-microsecond gap (no float cancellation at the
-    # gap_seconds boundary — see with_turn_gap)
-    cur = epoch_micros(ts)
-    gap_us = cur - F.lag(cur, 1).over(w)
-    thresh_us = F.lit(int(round(float(gap_seconds) * 1_000_000)))
-    is_new = F.when(gap_us.isNull() | (gap_us > thresh_us), 1).otherwise(0)
-    return df.withColumn(out, (F.sum(is_new).over(wc) - F.lit(1)).cast("long"))
+    """Gap-based sessionization ordered by ``order`` (default ``ts``):
+    ``session_id`` is 0-based per entity; see :func:`session_index`."""
+    w = entity_window(entity, ts if order is None else order)
+    return df.withColumn(out, session_index(ts, gap_seconds, w))
 
 
 def session_bounds(
@@ -424,6 +431,24 @@ def group_transform_join(
     return df.join(stats, group_by, "left")
 
 
+def _largest_group(df: DataFrame, entity: str) -> int:
+    """Rows in the largest ``entity`` group (0 if none): one eager job."""
+    return df.groupBy(entity).count().agg(F.max("count")).first()[0] or 0
+
+
+def _pandas_per_entity(df, col, entity, order, out, series_fn) -> DataFrame:
+    """``df`` plus double ``out``: pandas ``series_fn(col)`` per entity in ``order``."""
+    order_cols = [order] if isinstance(order, str) else list(order)
+    schema = T.StructType(df.schema.fields + [T.StructField(out, T.DoubleType(), True)])
+
+    def fn(pdf):
+        pdf = pdf.sort_values(order_cols, kind="mergesort")
+        pdf[out] = series_fn(pdf[col])
+        return pdf
+
+    return df.groupBy(entity).applyInPandas(fn, schema)
+
+
 def rolling_median(
     df: DataFrame,
     col: str,
@@ -442,26 +467,17 @@ def rolling_median(
     job); groups beyond ``max_group_rows`` are refused with guidance
     instead of OOMing an executor — at that size pre-split by session
     or switch to an approximate sketch."""
-    from pyspark.sql import types as T
-
     out = out or f"{col}_roll_median{window_rows}"
-    biggest_row = df.groupBy(entity).count().agg(F.max("count").alias("m")).first()
-    biggest = biggest_row["m"] or 0
+    biggest = _largest_group(df, entity)
     if biggest > max_group_rows:
         raise ValueError(
             f"largest {entity} group has {biggest} rows > max_group_rows="
             f"{max_group_rows}; pre-split by session_id or use an "
             "approximate rolling quantile before applyInPandas"
         )
-    order_cols = [order] if isinstance(order, str) else list(order)
-    schema = T.StructType(df.schema.fields + [T.StructField(out, T.DoubleType(), True)])
-
-    def fn(pdf):
-        pdf = pdf.sort_values(order_cols, kind="mergesort")
-        pdf[out] = pdf[col].rolling(window_rows, min_periods=1).median()
-        return pdf
-
-    return df.groupBy(entity).applyInPandas(fn, schema)
+    return _pandas_per_entity(
+        df, col, entity, order, out, lambda s: s.rolling(window_rows, min_periods=1).median()
+    )
 
 
 def expanding_impute(
@@ -480,10 +496,8 @@ def expanding_impute(
     if func not in ("mean", "min", "max", "last"):
         raise ValueError("expanding_impute supports mean/min/max/last")
     w = entity_window(entity, order).rowsBetween(Window.unboundedPreceding, -1)
-    agg = {"mean": F.avg, "min": F.min, "max": F.max,
-           "last": lambda c: F.last(c, ignorenulls=True)}[func]
     return df.withColumns(
-        {c: F.coalesce(F.col(c), agg(F.col(c)).over(w)) for c in cols}
+        {c: F.coalesce(F.col(c), _AGGS[func](F.col(c)).over(w)) for c in cols}
     )
 
 
@@ -575,11 +589,8 @@ def rows_since_event(
     """
     w = entity_window(entity, order)
     rn = F.row_number().over(w)
-    base = df.withColumn("_rn", rn)
-    prior = F.max(F.when(condition, F.col("_rn"))).over(
-        entity_window(entity, order).rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return base.withColumn(out, (F.col("_rn") - prior).cast("bigint")).drop("_rn")
+    prior = F.max(F.when(condition, rn)).over(w.rowsBetween(Window.unboundedPreceding, -1))
+    return df.withColumn(out, (rn - prior).cast("bigint"))
 
 
 def with_pct_change(
@@ -653,18 +664,12 @@ def with_ewma(
         raise ValueError("method must be auto|prefix|pandas")
     out = out or f"{col}_ewma"
     w = 1.0 - alpha
-    import math
-
     k_max = int(700.0 / -math.log(w))
     if method == "auto":
-        biggest = (
-            df.groupBy(entity).count().agg(F.max("count").alias("m")).first()["m"] or 0
-        )
-        method = "prefix" if biggest <= k_max else "pandas"
+        method = "prefix" if _largest_group(df, entity) <= k_max else "pandas"
 
-    order_cols = [order] if isinstance(order, str) else list(order)
     if method == "prefix":
-        win = entity_window(entity, order_cols)
+        win = entity_window(entity, order)
         cum = win.rowsBetween(Window.unboundedPreceding, 0)
         k = F.row_number().over(win) - 1
         inv_w = F.pow(F.lit(1.0 / w), k)  # (1-α)^(-k)
@@ -678,13 +683,6 @@ def with_ewma(
             out, F.when(k <= F.lit(k_max), (num / den).cast("double"))
         )
 
-    from pyspark.sql import types as T
-
-    schema = T.StructType(df.schema.fields + [T.StructField(out, T.DoubleType(), True)])
-
-    def _ewm(pdf):
-        pdf = pdf.sort_values(order_cols, kind="mergesort")
-        pdf[out] = pdf[col].ewm(alpha=alpha, adjust=True).mean()
-        return pdf
-
-    return df.groupBy(entity).applyInPandas(_ewm, schema=schema)
+    return _pandas_per_entity(
+        df, col, entity, order, out, lambda s: s.ewm(alpha=alpha, adjust=True).mean()
+    )

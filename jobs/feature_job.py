@@ -23,21 +23,22 @@ stages), per-task shuffle-read ``skew`` and the checkpoint's written
 (e.g. --gap-seconds) resumes from the output without writing it again;
 changing any of them recomputes.
 
-Features per (conv_id, turn_idx, ts) anchor — every window frame ends
-at the current row and sorts ascending, so no feature reads a turn
-with ts greater than the anchor (zero temporal leakage; Pipeline.run
-audits the frames before the write and journals ``leak_audit``):
+Features per (conv_id, turn_idx, ts) anchor, one ``withColumns`` per
+stage (``feature_columns``): every window frame ends at the current row
+and sorts ascending, so no feature reads a turn with ts greater than the
+anchor (zero temporal leakage; Pipeline.run audits the frames before
+the write and journals ``leak_audit``):
 
-- session_id        gap-based sessionization (cumulative-sum pattern)
-- turn_gap_s        ts - lag(ts)
+- session_id        gap-based session index (cumulative-sum pattern)
+- turn_gap_s        ts - lag(ts), exact in integer microseconds
 - text_len_lag1     lag of the previous turn's text length
 - tokens_roll_mean5 rolling mean over the last 5 turns
 - tokens_cum_sum    expanding sum
 - score_ffill       last-observation-carried-forward score
 - last_tool         latest tool call with ts <= the anchor's ts
                     (merge_asof backward; the greatest tool wins a ts
-                    tie): a running max of struct(ts, tool) over the
-                    stack's own conv_id window, no join or exchange
+                    tie): a running max of struct(ts, tool) ordered
+                    by ts alone, a RANGE frame on the stack's sort
 """
 
 from __future__ import annotations
@@ -48,7 +49,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import Window
+from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
 
@@ -75,43 +76,42 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def build_pipeline(workdir: str, gap_seconds: float):
+def feature_columns(gap_seconds: float) -> dict[str, dict[str, Column]]:
+    """Each stage's features as ``{name: Column}``, over one window in turn order."""
     from feature_engineering_tk_spark.operators import window_features as W
+
+    w = W.entity_window("conv_id", ["ts", "turn_idx"])
+    upto = w.rowsBetween(Window.unboundedPreceding, 0)
+    call = F.when(F.col("tool").isNotNull(), F.struct("ts", "tool"))
+    carry = F.max(call).over(Window.partitionBy("conv_id").orderBy("ts"))
+    return {
+        "sessionize": {"session_id": W.session_index("ts", gap_seconds, w)},
+        "lag_features": {
+            "text_len_lag1": F.lag(F.length("text"), 1).over(w),
+            "turn_gap_s": W.turn_gap("ts", w),
+        },
+        "rolling_features": {
+            "tokens_roll_mean5": F.avg("tokens").over(w.rowsBetween(-4, 0)),
+            "tokens_cum_sum": F.sum("tokens").over(upto),
+            "score_ffill": F.last("score", ignorenulls=True).over(upto),
+        },
+        "attach_last_tool": {
+            "last_tool": F.when(carry["ts"].isNotNull(), carry["tool"]),
+            "ds": F.to_date("ts"),
+        },
+    }
+
+
+def build_pipeline(workdir: str, gap_seconds: float):
+    """Four stages, each one ``withColumns``; needs an active SparkContext."""
     from feature_engineering_tk_spark.plans.pipeline import Pipeline
 
-    ORDER = ["ts", "turn_idx"]  # stable per-conversation turn ordering
-
-    def sessionize(df):
-        return W.sessionize(df, gap_seconds, entity="conv_id", ts="ts", order=ORDER)
-
-    def lag_features(df):
-        df = df.withColumn("text_len", F.length("text"))
-        df = W.with_lag(df, "text_len", 1, entity="conv_id", order=ORDER, out="text_len_lag1")
-        df = W.with_turn_gap(df, ts="ts", entity="conv_id", order=ORDER, out="turn_gap_s")
-        return df.drop("text_len")
-
-    def rolling_features(df):
-        df = W.rolling_agg(df, "tokens", "mean", 5, entity="conv_id", order=ORDER, out="tokens_roll_mean5")
-        df = W.cumulative_agg(df, "tokens", "sum", entity="conv_id", order=ORDER, out="tokens_cum_sum")
-        df = df.withColumn("score_ffill", F.col("score"))
-        return W.forward_fill(df, ["score_ffill"], entity="conv_id", order=ORDER)
-
-    def attach_last_tool(df):
-        # the default RANGE frame ends at the current row's ts peers, so
-        # a tool call at the anchor's ts is seen even from an earlier
-        # turn_idx; ordering by ts alone reuses the stack's sort
-        call = F.when(F.col("tool").isNotNull(), F.struct("ts", "tool"))
-        carry = F.max(call).over(Window.partitionBy("conv_id").orderBy("ts"))
-        found = F.col("ts").isNotNull() & carry["ts"].isNotNull()
-        return df.withColumn("last_tool", F.when(found, carry["tool"])).withColumn(
-            "ds", F.to_date("ts")
-        )
-
+    stage = {n: lambda df, c=c: df.withColumns(c) for n, c in feature_columns(gap_seconds).items()}
     pipe = Pipeline(workdir)
-    pipe.add("sessionize", sessionize, {"gap_seconds": gap_seconds})
-    pipe.add("lag_features", lag_features)
-    pipe.add("rolling_features", rolling_features)
-    pipe.add("attach_last_tool", attach_last_tool, checkpoint=True)
+    pipe.add("sessionize", stage["sessionize"], {"gap_seconds": gap_seconds})
+    pipe.add("lag_features", stage["lag_features"])
+    pipe.add("rolling_features", stage["rolling_features"])
+    pipe.add("attach_last_tool", stage["attach_last_tool"], checkpoint=True)
     return pipe
 
 

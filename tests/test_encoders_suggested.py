@@ -221,6 +221,16 @@ def test_with_ewma_pandas_path_matches_prefix(transcripts):
     pa = a.toPandas().sort_values(key)["e"].to_numpy()
     pb = b.toPandas().sort_values(key)["e"].to_numpy()
     assert np.allclose(pa, pb, equal_nan=True)
+    # auto counts the largest conversation: within the prefix horizon
+    # it is the prefix form; past it (alpha near 1, horizon 50 rows)
+    # the pandas form
+    c = with_ewma(transcripts, "tokens", alpha=0.2, out="e", method="auto")
+    assert np.array_equal(c.toPandas().sort_values(key)["e"].to_numpy(), pa, equal_nan=True)
+    near1 = {"alpha": 0.999999, "out": "e"}
+    d = with_ewma(transcripts, "tokens", method="auto", **near1).toPandas().sort_values(key)
+    e = with_ewma(transcripts, "tokens", method="pandas", **near1).toPandas().sort_values(key)
+    assert transcripts.groupBy("conv_id").count().agg({"count": "max"}).first()[0] > 50
+    assert np.array_equal(d["e"].to_numpy(), e["e"].to_numpy())
     with pytest.raises(ValueError):
         with_ewma(transcripts, "tokens", alpha=1.5)
 

@@ -208,6 +208,69 @@ def _job_stages(workdir):
     return [s.fn for s in build_pipeline(workdir, gap_seconds=1800.0).stages]
 
 
+def _helper_chain(df, gap_seconds):
+    """The job's features through the public DataFrame helpers, one
+    ``withColumn`` each, with a temp column and a copy-then-fill."""
+    from pyspark.sql import Window
+
+    from feature_engineering_tk_spark.operators import window_features as W
+
+    kw = {"entity": "conv_id", "order": ["ts", "turn_idx"]}
+    df = W.sessionize(df, gap_seconds, ts="ts", **kw)
+    df = df.withColumn("text_len", F.length("text"))
+    df = W.with_lag(df, "text_len", 1, out="text_len_lag1", **kw)
+    df = W.with_turn_gap(df, ts="ts", out="turn_gap_s", **kw).drop("text_len")
+    df = W.rolling_agg(df, "tokens", "mean", 5, out="tokens_roll_mean5", **kw)
+    df = W.cumulative_agg(df, "tokens", "sum", out="tokens_cum_sum", **kw)
+    df = W.forward_fill(df.withColumn("score_ffill", F.col("score")), ["score_ffill"], **kw)
+    call = F.when(F.col("tool").isNotNull(), F.struct("ts", "tool"))
+    carry = F.max(call).over(Window.partitionBy("conv_id").orderBy("ts"))
+    found = F.col("ts").isNotNull() & carry["ts"].isNotNull()
+    return df.withColumn("last_tool", F.when(found, carry["tool"])).withColumn("ds", F.to_date("ts"))
+
+
+def test_job_stages_equal_the_helper_chain(spark, transcripts, tmp_path):
+    """The declared columns of the four stages equal the helper chain
+    exactly, over every column: on the transcripts plus equal-ts ties,
+    NULL score runs, NULL tools and a gap of exactly gap_seconds (no
+    new session) next to one 1 µs longer (a new session)."""
+    from datetime import datetime, timedelta
+
+    from feature_engineering_tk_spark.datagen import TRANSCRIPT_SCHEMA
+
+    t0 = datetime(2024, 3, 1, 12)
+    edge = [
+        # conv_id, turn_idx, ts offset, tool, score
+        ("tie", 0, timedelta(0), None, None),
+        ("tie", 1, timedelta(0), "calc", None),
+        ("tie", 2, timedelta(0), "code", 0.5),
+        ("tie", 3, timedelta(seconds=1), None, None),
+        ("tie", 4, timedelta(seconds=1), None, None),
+        ("gap", 0, timedelta(0), None, None),
+        ("gap", 1, timedelta(seconds=1800), None, None),
+        ("gap", 2, timedelta(seconds=3600, microseconds=1), "search", 1.5),
+        ("gap", 3, timedelta(seconds=5400, microseconds=1), None, None),
+        ("gap", 4, timedelta(seconds=9000, microseconds=2), None, 2.5),
+    ]
+    rows = [
+        (c, i, "user", "x" * (i + 1), tool, t0 + dt, 10.0, 7 * i, score, 0)
+        for c, i, dt, tool, score in edge
+    ]
+    df = transcripts.unionByName(spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA))
+
+    got = df
+    for fn in _job_stages(str(tmp_path / "unused")):
+        got = fn(got)
+    want = _helper_chain(df, 1800.0)
+    assert got.columns == want.columns
+    key = ["conv_id", "turn_idx"]
+    got_pdf = got.toPandas().sort_values(key).reset_index(drop=True)
+    want_pdf = want.toPandas().sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got_pdf, want_pdf, check_exact=True)
+    sessions = got_pdf[got_pdf["conv_id"] == "gap"]["session_id"].tolist()
+    assert sessions == [0, 0, 1, 1, 2]
+
+
 def test_attach_last_tool_matches_asof_join_on_ties_and_edges(spark, tmp_path):
     """The window carry picks what a backward ``asof_join`` of the table
     to its own tool calls picks: equal-ts calls are seen from an earlier
@@ -295,6 +358,9 @@ def test_backfill_plan_has_one_exchange_and_one_scan(spark, tmp_path):
     assert plan.broadcasts == 0 and plan.joins == (), plan
     assert len(plan.scans) == 1, plan
     assert "Union" not in plan.nodes, plan
+    # sessionize's lag, its running sum, every other (ts, turn_idx)
+    # feature in one, and last_tool's ts-ordered running max
+    assert plan.nodes.count("Window") == 4, plan
 
 
 def test_backfill_plan_reads_no_future_rows(spark, spark_jobs, tmp_path):

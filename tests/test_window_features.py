@@ -255,15 +255,8 @@ def test_flagship_feature_vector_allclose(spark, transcripts, transcripts_pdf):
 
     from jobs.feature_job import build_pipeline
 
-    out = (
-        build_pipeline(workdir="/tmp/_unused_fv", gap_seconds=1800.0)
-        .stages[0]
-        .fn(transcripts)
-    )
-    # run the remaining stages without checkpointing machinery
-    import jobs.feature_job as J
-
-    pipe = J.build_pipeline(workdir="/tmp/_unused_fv", gap_seconds=1800.0)
+    # run the stages without checkpointing machinery
+    pipe = build_pipeline(workdir="/tmp/_unused_fv", gap_seconds=1800.0)
     cur = transcripts
     for stage in pipe.stages:
         cur = stage.fn(cur)
@@ -436,3 +429,22 @@ def test_rows_since_event_prior_frame(spark):
     assert got[("c", 2)] == 2
     assert got[("c", 3)] == 1
     assert got[("d", 0)] is None  # never crosses conversations
+
+
+@pytest.mark.parametrize("name", ["_rn", "_ip_pos"])
+def test_window_helpers_keep_a_callers_column(spark, name):
+    """rows_since_event and interpolate_linear add no temp column, so a
+    caller's own column of any name passes through both unchanged."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        [("c", i, v, 100 + i) for i, v in enumerate([1.0, None, 3.0, None])],
+        "conv_id string, turn_idx int, v double, mine long",
+    ).withColumn(name, F.col("mine"))
+    for out in (
+        W.rows_since_event(df, F.col("v").isNotNull()),
+        W.interpolate_linear(df, ["v"]),
+    ):
+        assert out.columns[: len(df.columns)] == df.columns
+        got = [r[name] for r in out.orderBy("turn_idx").collect()]
+        assert got == [100, 101, 102, 103]
