@@ -196,11 +196,11 @@ def q_asof_nearest(spark, sf_dir):
 
 
 def q_asof_packed(spark, sf_dir):
-    """As-of join for a left side already partitioned by the entity and
-    a bounded right side (operators/asof.py asof_join_packed):
-    the right side packs to one sorted array per entity (map-side
-    partial agg), then an entity equi-join + row-local array pick —
-    a pre-partitioned left side is NEVER re-shuffled (the union-tag
+    """As-of join for a bounded right side (operators/asof.py
+    asof_join_packed): the right side packs to one array of
+    (ts, values) per entity (map-side partial agg), then an entity
+    equi-join Spark picks by size + row-local array pick — a
+    pre-partitioned left side is NEVER re-shuffled (the union-tag
     path always is). Same <= tie semantics; merge_asof ROW semantics
     on the value columns. Oracle: DuckDB native ASOF JOIN."""
     from feature_engineering_tk_spark.operators.asof import asof_join_packed

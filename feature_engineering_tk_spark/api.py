@@ -547,12 +547,10 @@ class FeatureEngineer(_Tracked):
         group_by: list[str],
         agg_col: str,
         funcs=("mean", "sum", "std", "min", "max"),
-        skew_safe: bool = True,
     ) -> "FeatureEngineer":
-        from feature_engineering_tk_spark.operators import window_features as W
+        from feature_engineering_tk_spark.operators.window_features import group_transform_join
 
-        fn = W.group_transform_join if skew_safe else W.group_transform
-        self.df = fn(self.df, group_by, agg_col, list(funcs))
+        self.df = group_transform_join(self.df, group_by, agg_col, list(funcs))
         self._record("create_aggregations", group_by=group_by, agg_col=agg_col, funcs=list(funcs))
         return self
 

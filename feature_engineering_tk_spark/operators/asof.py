@@ -1,6 +1,6 @@
 """Point-in-time (as-of) join — the engine's core join operator.
 
-Spark has no native as-of join. Three algorithms share ONE semantics
+Spark has no native as-of join. Two algorithms share ONE semantics
 (pandas ``merge_asof``, whole-row):
 
 - :func:`asof_join` — union-tag: ONE shuffle of (left ∪ right) on the
@@ -8,16 +8,17 @@ Spark has no native as-of join. Three algorithms share ONE semantics
   right row travels as one struct ``(key, values…)``; a running
   ``max`` over right rows only carries the whole matching row onto
   every left anchor. Directions ``'backward'`` (default),
-  ``'forward'`` and ``'nearest'``.
-- :func:`asof_join_packed` — a left side already partitioned by the
-  entity and a bounded right side: the right side packs to one sorted
-  array per entity and joins on the entity key, so the left side is
-  never re-shuffled. Backward only.
-- :func:`asof_join_broadcast` — small right sides: the right side
-  packs to one array per entity and is broadcast, so the left side is
-  never shuffled. Backward only, no tolerance.
+  ``'forward'`` and ``'nearest'``. For dense right sides.
+- :func:`asof_join_packed` — a bounded right side packs to one array
+  of ``struct(ts, values…)`` per entity, joins the left side on the
+  entity key and each anchor picks its row from the array. Backward
+  only. Spark picks the join by size: a small packed side is
+  broadcast (``spark.sql.autoBroadcastJoinThreshold``, and AQE at run
+  time), so the left side is not shuffled; a large one is a
+  sort-merge join on the entity, which reuses the partitioning of a
+  window-feature left side.
 
-The contract all three keep:
+The contract both keep:
 
 - ``right.ts == left.ts`` IS matched (``<=`` backward, ``>=``
   forward).
@@ -161,39 +162,6 @@ def asof_join(
     )
 
 
-def asof_join_broadcast(
-    left: DataFrame,
-    right: DataFrame,
-    entity: str = "conv_id",
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    value_cols: list[str] | None = None,
-    suffix: str = "_asof",
-) -> DataFrame:
-    """Backward as-of join for SMALL right sides (snapshot stats,
-    vocabularies): the right rows are collected into one array per
-    entity and broadcast; each left row takes the greatest
-    ``(ts, values…)`` struct of its entity's array with
-    ``ts <= left.ts`` — the :func:`asof_join` rule.
-
-    The big left side is neither shuffled nor exploded: a map-side
-    null-safe equi-join on entity, then a scan of that entity's array
-    per left row — keep the right side aggregated.
-    """
-    value_cols = value_cols or _default_values(right, entity, right_ts)
-    r = right.groupBy(F.col(entity).alias("_re")).agg(
-        F.collect_list(_row(epoch_micros(F.col(right_ts)), value_cols)).alias("_rs")
-    )
-    joined = left.join(F.broadcast(r), left[entity].eqNullSafe(r["_re"]), "left")
-    t = epoch_micros(F.col(left_ts))
-    # NULL when the entity has no right row at or before t
-    pick = F.array_max(F.filter("_rs", lambda x: x["_k"] <= t))
-    return joined.select(
-        *[F.col(c) for c in left.columns],
-        *[pick[c].alias(f"{c}{suffix}") for c in value_cols],
-    )
-
-
 def asof_join_packed(
     left: DataFrame,
     right: DataFrame,
@@ -204,74 +172,51 @@ def asof_join_packed(
     tolerance_seconds: float | None = None,
     suffix: str = "_asof",
 ) -> DataFrame:
-    """Backward as-of join that NEVER re-shuffles a left side already
-    partitioned by the entity, for a bounded right side. Same semantics as :func:`asof_join`
-    backward: whole-row match, ``<=`` ties, greatest ``(ts, values…)``
-    row wins among equal timestamps, NULL entity matches NULL,
-    tolerance in integer µs.
+    """Backward as-of join for a bounded right side, with the
+    :func:`asof_join` backward semantics.
 
-    :func:`asof_join`'s union plan is best for two cold tables, but a
-    union can never reuse an existing partitioning, so dropping it at
-    the end of a window-feature stack re-shuffles the whole feature
-    table a second time.
+    The right side packs to ONE row per entity: ``groupBy(entity)``
+    collects its rows as ``struct(ts, values…)`` (map-side partial
+    aggregation). The left side equi-joins that on the entity key, and
+    each anchor takes the ``array_max`` of its entity's elements with
+    ``ts <= left.ts``: the greatest ``(ts, values…)`` row, the tie
+    rule. The pick is row-local, so the left side is never exploded.
 
-    Algorithm: pack the right side to ONE row per entity — the
-    ascending-sorted array of ``struct(ts, values…)`` built by
-    ``groupBy(entity)`` with map-side partial aggregation — then
-    equi-join on the entity key and take the last packed element with
-    ``ts <= left.ts`` (row-local array expressions). The join needs
-    clustering by the entity only, which a window-feature left side
-    already has, so Catalyst reuses the existing exchange and sort:
-    the big side moves zero additional bytes.
+    The join carries no hint; Spark picks it by size. A packed side
+    under ``spark.sql.autoBroadcastJoinThreshold`` (or one AQE sees is
+    small at run time) is broadcast, so the left side is not shuffled.
+    A larger one gets a sort-merge join on the entity alone, which
+    reuses a window stack's existing partitioning: the left side moves
+    no additional bytes.
+
+    NULL entities match each other, as in :func:`asof_join`, whose
+    window partitions NULL keys together. A plain ``==`` join drops
+    them, and ``eqNullSafe`` would key the join on
+    ``(coalesce(key), key IS NULL)`` and re-shuffle the left side. So
+    the NULL group of the same packed aggregate is read as one scalar
+    subquery and stands in for the joined array of NULL-keyed anchors.
 
     Contract: right rows per entity must be bounded (tool calls, state
-    changes, dimension updates — not another event stream); the packed
-    array lives in one aggregation buffer. For dense right sides use
-    :func:`asof_join`; for tiny ones :func:`asof_join_broadcast`.
+    changes, dimension updates, not another event stream); one
+    entity's array lives in one aggregation buffer. For a dense right
+    side, or a forward or nearest match, use :func:`asof_join`.
     """
     value_cols = value_cols or _default_values(right, entity, right_ts)
-    left_cols = left.columns
-
-    r_sel = right.select(
-        F.col(entity).alias("_e"),
-        _row(epoch_micros(F.col(right_ts)), value_cols).alias("_s"),
+    packed = right.groupBy(F.col(entity).alias("_e")).agg(
+        F.collect_list(_row(epoch_micros(F.col(right_ts)), value_cols)).alias("_pk")
     )
-    packed = (
-        r_sel.filter(F.col("_e").isNotNull())
-        .groupBy("_e")
-        .agg(F.sort_array(F.collect_list("_s")).alias("_pk"))
+    null_pk = packed.filter(F.col("_e").isNull()).select("_pk").scalar()
+    # a column of its own: Spark refuses a subquery inside a higher-order function
+    joined = left.join(packed, left[entity] == packed["_e"], "left").withColumn(
+        "_pk", F.coalesce(F.col("_pk"), F.when(F.col(entity).isNull(), null_pk))
     )
-    # NULL-entity parity with asof_join: its Window.partitionBy groups
-    # NULL-keyed rows into one partition and matches them to each
-    # other, while a plain == join would null out every NULL-keyed
-    # anchor. eqNullSafe would fix that but partitions the join on
-    # (coalesce(key), isnull(key)) — which does NOT match the window
-    # stack's hashpartitioning(key), so sort-merge would RE-SHUFFLE the
-    # entire left side: the exact exchange this operator exists to
-    # avoid. Instead the null group (at most ONE packed row) rides a
-    # broadcast nested-loop join gated on `entity IS NULL` — row-local,
-    # partitioning-preserving, and the extra right scan is pruned to
-    # nothing by parquet null-count statistics when no nulls exist.
-    packed_null = (
-        r_sel.filter(F.col("_e").isNull())
-        .groupBy()
-        .agg(F.sort_array(F.collect_list("_s")).alias("_pk0"))
-        .filter(F.size("_pk0") > 0)
-    )
-
     lt = epoch_micros(F.col(left_ts))
-    joined = (
-        left.join(packed, left[entity] == packed["_e"], "left")
-        .drop("_e")
-        .join(F.broadcast(packed_null), F.col(entity).isNull(), "left")
-    )
-    hits = F.filter(F.coalesce(F.col("_pk"), F.col("_pk0")), lambda s: s["_k"] <= lt)
-    # ANSI-safe: null when no match / entity absent from the right side
-    pick = F.try_element_at(hits, F.lit(-1))
+    # NULL when the entity has no right row at or before the anchor
+    pick = F.array_max(F.filter("_pk", lambda s: s["_k"] <= lt))
     if tolerance_seconds is not None:
         pick = F.when(_within(lt - pick["_k"], tolerance_seconds), pick)
     return joined.select(
-        *[F.col(c) for c in left_cols],
+        *[F.col(c) for c in left.columns],
         *[pick[c].alias(f"{c}{suffix}") for c in value_cols],
     )
 

@@ -43,6 +43,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from feature_engineering_tk_spark.operators.rows import unused_name
 from feature_engineering_tk_spark.plans.caching import pin
 
 # 31-bit Mersenne prime: keeps a*x + b within int64 under ANSI mode
@@ -89,24 +90,23 @@ def exact_dedup(
     exchange: the rank window and the copy count share one partition.
     """
     h = F.xxhash64(_norm_text(F.col(text_col)), F.length(F.col(text_col)))
+    hc = unused_name(df.columns, "_h")
     if score_col is None:
         return (
-            df.withColumn("_h", h)
-            .groupBy("_h")
+            df.withColumn(hc, h)
+            .groupBy(hc)
             .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("n_copies"))
-            .drop("_h")
+            .drop(hc)
         )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("_h").orderBy(
+    w = Window.partitionBy(hc).orderBy(
         F.col(score_col).desc_nulls_last(), F.col(id_col).asc()
     )
-    wc = Window.partitionBy("_h")
+    rn = unused_name([*df.columns, hc], "_rn")
     return (
-        df.withColumn("_h", h)
-        .withColumn("_rn", F.row_number().over(w))
-        .withColumn("n_copies", F.count(F.lit(1)).over(wc))
-        .where(F.col("_rn") == 1)
+        df.withColumn(hc, h)
+        .withColumn(rn, F.row_number().over(w))
+        .withColumn("n_copies", F.count(F.lit(1)).over(Window.partitionBy(hc)))
+        .where(F.col(rn) == 1)
         .select(id_col, "n_copies")
     )
 

@@ -18,6 +18,16 @@ DESTRUCTIVE_OPERATION_THRESHOLD = 0.3
 STABLE_ORDER = ("conv_id", "turn_idx")
 
 
+def unused_name(columns: list[str], base: str) -> str:
+    """``base``, prefixed with underscores until it names none of
+    ``columns`` (compared case-insensitively, as Spark resolves them):
+    a temp column that never overwrites a caller's."""
+    taken = {c.lower() for c in columns}
+    while base.lower() in taken:
+        base = "_" + base
+    return base
+
+
 def filter_rows(df: DataFrame, predicate: Column | str) -> DataFrame:
     """reference preprocessing.py:610-654 — boolean-mask filter; the
     callable form maps to a Column expression (never per-row Python)."""
@@ -64,14 +74,15 @@ def remove_duplicates(
         return df.dropDuplicates(subset)
     w = Window.partitionBy(*subset)
     if keep == "first":
-        wo = w.orderBy(*[F.col(c).asc() for c in order])
-        return df.withColumn("_rn", F.row_number().over(wo)).filter(F.col("_rn") == 1).drop("_rn")
-    if keep == "last":
-        wo = w.orderBy(*[F.col(c).desc() for c in order])
-        return df.withColumn("_rn", F.row_number().over(wo)).filter(F.col("_rn") == 1).drop("_rn")
-    if keep is False or keep == "none":
-        return df.withColumn("_n", F.count(F.lit(1)).over(w)).filter(F.col("_n") == 1).drop("_n")
-    raise ValueError(f"keep must be 'first'|'last'|'any'|False, got {keep!r}")
+        rank = F.row_number().over(w.orderBy(*[F.col(c).asc() for c in order]))
+    elif keep == "last":
+        rank = F.row_number().over(w.orderBy(*[F.col(c).desc() for c in order]))
+    elif keep is False or keep == "none":
+        rank = F.count(F.lit(1)).over(w)
+    else:
+        raise ValueError(f"keep must be 'first'|'last'|'any'|False, got {keep!r}")
+    tmp = unused_name(df.columns, "_rn")
+    return df.withColumn(tmp, rank).filter(F.col(tmp) == 1).drop(tmp)
 
 
 def remove_constant_columns(df: DataFrame, columns: list[str] | None = None) -> DataFrame:

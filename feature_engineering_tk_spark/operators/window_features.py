@@ -16,7 +16,8 @@ semantics grafted here:
   back onto every row (pandas ``std`` is ddof=1 → ``stddev_samp``).
 
 ``session_index`` and ``turn_gap`` are the ``Column`` forms of
-``sessionize`` and ``with_turn_gap``, for features declared as columns.
+``sessionize`` and ``with_turn_gap``, for features declared as columns;
+both read one ``gap_us`` expression, which a caller builds once.
 
 Leakage contract: every helper here builds ascending frames that END
 AT THE CURRENT ROW (``rowsBetween(lo, 0)`` / ``rangeBetween(lo, 0)``)
@@ -90,24 +91,25 @@ def with_lead(
     return df.withColumn(out or f"{col}_lead{k}", F.lead(col, k).over(entity_window(entity, order)))
 
 
-def _gap_us(ts: str, w: WindowSpec) -> Column:
-    # integer µs: subtracting two ~1.7e9 epoch doubles would lose ~1e-7 s
+def gap_us(ts: str, w: WindowSpec) -> Column:
+    """Integer µs since the previous row of the unframed window ``w``
+    (NULL on the first): subtracting two ~1.7e9 epoch doubles would
+    lose ~1e-7 s."""
     cur = epoch_micros(ts)
     return cur - F.lag(cur, 1).over(w)
 
 
-def turn_gap(ts: str, w: WindowSpec) -> Column:
-    """Seconds since the previous row of the unframed window ``w``
-    (NULL on the first), exact as pandas timedelta subtraction is."""
-    return _gap_us(ts, w).cast("double") / F.lit(1_000_000.0)
+def turn_gap(gap: Column) -> Column:
+    """A :func:`gap_us` gap in seconds, exact as pandas timedelta
+    subtraction is."""
+    return gap.cast("double") / F.lit(1_000_000.0)
 
 
-def session_index(ts: str, gap_seconds: float, w: WindowSpec) -> Column:
+def session_index(gap: Column, gap_seconds: float, w: WindowSpec) -> Column:
     """0-based session index over the unframed window ``w``: the running
-    count of rows whose exact gap to the previous row is NULL or
+    count of rows whose :func:`gap_us` ``gap`` over ``w`` is NULL or
     exceeds ``gap_seconds``. Two stacked windows over one sort."""
     thresh_us = F.lit(int(round(float(gap_seconds) * 1_000_000)))
-    gap = _gap_us(ts, w)
     is_new = F.when(gap.isNull() | (gap > thresh_us), 1).otherwise(0)
     return (F.sum(is_new).over(w.rowsBetween(Window.unboundedPreceding, 0)) - 1).cast("long")
 
@@ -120,7 +122,7 @@ def with_turn_gap(
     out: str = "turn_gap_s",
 ) -> DataFrame:
     """:func:`turn_gap` per ``entity`` in ``order`` (NULL on its first row)."""
-    return df.withColumn(out, turn_gap(ts, entity_window(entity, order)))
+    return df.withColumn(out, turn_gap(gap_us(ts, entity_window(entity, order))))
 
 
 def rolling_agg(
@@ -340,7 +342,7 @@ def sessionize(
     """Gap-based sessionization ordered by ``order`` (default ``ts``):
     ``session_id`` is 0-based per entity; see :func:`session_index`."""
     w = entity_window(entity, ts if order is None else order)
-    return df.withColumn(out, session_index(ts, gap_seconds, w))
+    return df.withColumn(out, session_index(gap_us(ts, w), gap_seconds, w))
 
 
 def session_bounds(
@@ -405,7 +407,6 @@ def group_transform_join(
     group_by: list[str],
     agg_col: str,
     funcs: list[str] = ("mean", "sum", "std", "min", "max"),
-    broadcast: bool = True,
 ) -> DataFrame:
     """Skew-safe twin of :func:`group_transform`: whole-group statistics
     via ``groupBy`` (map-side PARTIAL aggregation pre-merges a hot
@@ -416,9 +417,7 @@ def group_transform_join(
     Use this over the window form whenever the entity distribution is
     heavy-tailed: a whole-partition window must co-locate each entity
     in one task, which is exactly what a 10^7-turn conversation breaks.
-    ``broadcast=True`` for dim-sized group counts; False lets AQE pick
-    (shuffle join with skew splitting) when the group count itself is
-    huge."""
+    The statistics are broadcast back: one row per group is dim-sized."""
     name = "_".join(group_by)
     stats = df.groupBy(*group_by).agg(
         *[
@@ -426,9 +425,7 @@ def group_transform_join(
             for f in funcs
         ]
     )
-    if broadcast:
-        stats = F.broadcast(stats)
-    return df.join(stats, group_by, "left")
+    return df.join(F.broadcast(stats), group_by, "left")
 
 
 def _largest_group(df: DataFrame, entity: str) -> int:

@@ -63,16 +63,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--gap-seconds", type=float, default=1800.0)
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--master", default=None)
-    p.add_argument(
-        "--bucket-output",
-        type=int,
-        default=0,
-        metavar="N",
-        help="ALSO register the feature table hash-bucketed on conv_id into N "
-        "buckets (catalog table named after the output basename): downstream "
-        "joins/groupBys on conv_id then plan with zero exchanges — pay the "
-        "pipeline's one shuffle at write time instead of in every consumer",
-    )
     return p
 
 
@@ -81,14 +71,15 @@ def feature_columns(gap_seconds: float) -> dict[str, dict[str, Column]]:
     from feature_engineering_tk_spark.operators import window_features as W
 
     w = W.entity_window("conv_id", ["ts", "turn_idx"])
+    gap = W.gap_us("ts", w)
     upto = w.rowsBetween(Window.unboundedPreceding, 0)
     call = F.when(F.col("tool").isNotNull(), F.struct("ts", "tool"))
     carry = F.max(call).over(Window.partitionBy("conv_id").orderBy("ts"))
     return {
-        "sessionize": {"session_id": W.session_index("ts", gap_seconds, w)},
+        "sessionize": {"session_id": W.session_index(gap, gap_seconds, w)},
         "lag_features": {
             "text_len_lag1": F.lag(F.length("text"), 1).over(w),
-            "turn_gap_s": W.turn_gap("ts", w),
+            "turn_gap_s": W.turn_gap(gap),
         },
         "rolling_features": {
             "tokens_roll_mean5": F.avg("tokens").over(w.rowsBetween(-4, 0)),
@@ -115,35 +106,6 @@ def build_pipeline(workdir: str, gap_seconds: float):
     return pipe
 
 
-def register_bucketed(feat, output: str, n_buckets: int) -> str:
-    """Register the feature table hash-bucketed on conv_id; returns the
-    catalog table name.  `iceberg:cat.db.tbl` outputs get a MANAGED
-    bucketed table (no external path — "iceberg:..." is not a
-    filesystem location); path outputs get a sibling dir.  Either way
-    the identifier is sanitized — basenames like `feat-v2` or
-    `prod.turn_features` are not valid Spark table names as-is."""
-    import re
-
-    from feature_engineering_tk_spark.sources.tables import write_bucketed
-
-    # mirror write_table's rule exactly: ONLY iceberg: refs are catalog
-    # tables, everything else (slash or not) is a filesystem path — a
-    # "/"-heuristic would silently send a relative-path output's
-    # bucketed copy to the warehouse dir instead of the sibling dir
-    is_table_ref = output.startswith("iceberg:")
-    base = output.split(":", 1)[-1].rstrip("/")
-    table = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(base)) + "_bucketed"
-    write_bucketed(
-        feat,
-        table,
-        "conv_id",
-        n_buckets=n_buckets,
-        sort_by=["conv_id", "turn_idx"],
-        path=None if is_table_ref else base + "_bucketed",
-    )
-    return table
-
-
 def main(argv=None) -> None:
     args = build_parser().parse_args(argv)
     from feature_engineering_tk_spark.datagen import TRANSCRIPT_SCHEMA, generate_transcripts
@@ -162,9 +124,6 @@ def main(argv=None) -> None:
 
     pipe = build_pipeline(args.workdir, args.gap_seconds)
     feat = pipe.run(spark, df, resume=not args.no_resume, output=args.output)
-    if args.bucket_output:
-        table = register_bucketed(feat, args.output, args.bucket_output)
-        print(f"registered bucketed table {table} ({args.bucket_output} buckets)")
     print(f"features at {args.output}; lineage at {pipe.journal_path}")
     spark.stop()
 

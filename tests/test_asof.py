@@ -7,7 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from feature_engineering_tk_spark.operators.asof import asof_join, asof_join_broadcast
+from feature_engineering_tk_spark.operators.asof import asof_join, asof_join_packed
 from feature_engineering_tk_spark.plans.inspect import inspect
 
 
@@ -59,19 +59,11 @@ def test_asof_union_window(asof_frames):
     )
 
 
-def test_asof_broadcast_variant(asof_frames):
-    left, right, left_pdf, right_pdf = asof_frames
-    got = _collect(asof_join_broadcast(left, right, entity="conv_id", value_cols=["tokens"]))
-    exp = _oracle(left_pdf, right_pdf)
-    assert np.allclose(
-        got["tokens_asof"].astype(float), exp["tokens_asof"].astype(float), equal_nan=True
-    )
-
-
-def test_asof_broadcast_variant_broadcasts(asof_frames):
+def test_asof_packed_small_right_side_broadcasts(asof_frames):
+    """Spark picks the join by size: a small packed side is broadcast."""
     left, right, _, _ = asof_frames
-    plan = inspect(asof_join_broadcast(left, right, entity="conv_id", value_cols=["tokens"]))
-    assert plan.broadcasts >= 1 and "BroadcastHashJoinExec" in plan.joins, plan
+    plan = inspect(asof_join_packed(left, right, entity="conv_id", value_cols=["tokens"]))
+    assert plan.broadcasts >= 1 and plan.joins == ("BroadcastHashJoinExec",), plan
 
 
 def test_asof_tolerance(asof_frames):
@@ -105,7 +97,7 @@ def test_asof_exact_ts_tie_included(spark):
             }
         )
     )
-    for join in (asof_join, asof_join_broadcast):
+    for join in (asof_join, asof_join_packed):
         got = join(left, right, value_cols=["v"]).toPandas().sort_values("turn_idx")["v_asof"]
         assert got.tolist() == [1.0, 2.0], join
 
@@ -178,8 +170,6 @@ def test_range_join_agg_leakage_free(spark, transcripts):
 
 
 def test_asof_packed_matches_merge_asof(asof_frames):
-    from feature_engineering_tk_spark.operators.asof import asof_join_packed
-
     left, right, left_pdf, right_pdf = asof_frames
     got = _collect(asof_join_packed(left, right, entity="conv_id", value_cols=["tokens"]))
     exp = _oracle(left_pdf, right_pdf)
@@ -189,8 +179,6 @@ def test_asof_packed_matches_merge_asof(asof_frames):
 
 
 def test_asof_packed_tolerance_and_ties(spark, asof_frames):
-    from feature_engineering_tk_spark.operators.asof import asof_join_packed
-
     left, right, left_pdf, right_pdf = asof_frames
     got = _collect(
         asof_join_packed(
@@ -214,8 +202,6 @@ def test_asof_packed_tolerance_and_ties(spark, asof_frames):
 
 
 def test_asof_packed_missing_entity_is_null(spark):
-    from feature_engineering_tk_spark.operators.asof import asof_join_packed
-
     left = spark.createDataFrame(
         pd.DataFrame({"conv_id": ["a", "b"], "turn_idx": [0, 0],
                       "ts": pd.to_datetime(["2024-01-01", "2024-01-01"])})
@@ -228,22 +214,45 @@ def test_asof_packed_missing_entity_is_null(spark):
     assert out.loc["a", "v_asof"] == 1.0 and np.isnan(out.loc["b", "v_asof"])
 
 
-def test_asof_packed_reuses_left_partitioning(spark, transcripts):
+def test_asof_packed_reuses_left_partitioning(spark, transcripts_pdf):
     """Pre-partitioned left side: dropped onto a window-feature stack the
     packed as-of must add NO shuffle to what the stack alone plans (the
-    union-tag path re-shuffles everything instead)."""
-    from feature_engineering_tk_spark.operators import window_features as W
-    from feature_engineering_tk_spark.operators.asof import asof_join_packed
+    union-tag path re-shuffles everything instead), under either join
+    Spark picks: a broadcast hash join by default, a sort-merge join on
+    the entity alone with broadcasting off. The entity is nullable, as
+    a parquet read gives it, and neither join plans a nested-loop join
+    or a null-safe (coalesce / IS NULL keyed) shuffle for NULL
+    entities."""
+    from pyspark.sql import types as T
 
+    from feature_engineering_tk_spark.datagen import TRANSCRIPT_SCHEMA
+    from feature_engineering_tk_spark.operators import window_features as W
+
+    schema = T.StructType([T.StructField(f.name, f.dataType, True) for f in TRANSCRIPT_SCHEMA])
+    transcripts = spark.createDataFrame(transcripts_pdf, schema).repartition(4, "conv_id").cache()
+    transcripts.count()  # a cache keeps its partitioning once built
     feat = W.rolling_agg(transcripts, "tokens", "mean", 3)
     tools = transcripts.filter(F.col("tool").isNotNull()).select("conv_id", "ts", "tool")
 
     stack = inspect(feat)
-    packed = inspect(asof_join_packed(feat, tools, value_cols=["tool"]))
     union = inspect(asof_join(feat, tools, value_cols=["tool"]))
-    assert packed.shuffles == stack.shuffles, packed
-    assert len(packed.shuffles) < len(union.shuffles), union
-    assert "Window" in packed.nodes, packed
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default, joins = spark.conf.get(key), {}
+    for threshold in (default, "-1"):
+        spark.conf.set(key, threshold)
+        try:
+            packed = inspect(asof_join_packed(feat, tools, value_cols=["tool"]))
+        finally:
+            spark.conf.set(key, default)
+        assert packed.shuffles == stack.shuffles, packed
+        assert len(packed.shuffles) < len(union.shuffles), union
+        assert "Window" in packed.nodes, packed
+        assert not any(
+            "coalesce" in k or "IS NULL" in k for s in packed.shuffles for k in s.keys
+        ), packed
+        assert "BroadcastNestedLoopJoinExec" not in packed.joins, packed
+        joins[threshold] = packed.joins
+    assert joins == {default: ("BroadcastHashJoinExec",), "-1": ("SortMergeJoinExec",)}, joins
 
 
 def _oracle_directed(left_pdf, right_pdf, direction, tolerance=None):

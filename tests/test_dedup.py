@@ -585,6 +585,10 @@ class TestExactDedupBest:
             for r in exact_dedup(df, "text", "doc_id", score_col="quality").collect()
         }
         assert got == {2: 3, 4: 1}
+        # id and score columns named like the operator's temp columns
+        df = df.withColumnsRenamed({"doc_id": "_rn", "quality": "_h"})
+        got = {r["_rn"]: r["n_copies"] for r in exact_dedup(df, "text", "_rn", score_col="_h").collect()}
+        assert got == {2: 3, 4: 1}
 
     def test_null_scores_lose(self, spark):
         from feature_engineering_tk_spark.operators.dedup import exact_dedup
@@ -601,3 +605,5 @@ class TestExactDedupBest:
         df = spark.createDataFrame(docs, "doc_id int, text string, quality int")
         got = {r["doc_id"] for r in exact_dedup(df, "text", "doc_id").collect()}
         assert got == {1}  # min id, score ignored
+        got = {r["_h"] for r in exact_dedup(df.withColumnRenamed("doc_id", "_h"), "text", "_h").collect()}
+        assert got == {1}

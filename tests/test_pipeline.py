@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from feature_engineering_tk_spark.operators import window_features as W
-from feature_engineering_tk_spark.operators.asof import asof_join, asof_join_broadcast, asof_join_packed
+from feature_engineering_tk_spark.operators.asof import asof_join, asof_join_packed
 from feature_engineering_tk_spark.operators.salted import salted_group_agg
 from feature_engineering_tk_spark.plans.pipeline import Pipeline
 
@@ -154,9 +154,6 @@ def test_leak_audit_rejects_future_reads(spark, transcripts, tmp_path, name):
 PAST_ONLY = {
     "asof_backward": lambda d: asof_join(d, _tool_calls(d), value_cols=["tool"]),
     "asof_packed": lambda d: asof_join_packed(
-        W.with_lag(d, "tokens"), _tool_calls(d), value_cols=["tool"]
-    ),
-    "asof_broadcast": lambda d: asof_join_broadcast(
         W.with_lag(d, "tokens"), _tool_calls(d), value_cols=["tool"]
     ),
     "rolling_zscore": lambda d: W.rolling_zscore(d, "tokens"),

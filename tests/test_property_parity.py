@@ -223,18 +223,15 @@ def _merge_asof_oracle(left, right, direction, tol_us):
 @SET
 def test_asof_join_matches_pandas_merge_asof(spark, left, right, tol_us):
     """Every as-of implementation == pandas.merge_asof, whole-row:
-    asof_join in all three directions, asof_join_packed and
-    asof_join_broadcast (backward; broadcast takes no tolerance), over
-    nullable values, duplicate and exactly-tied right timestamps,
-    anchors before an entity's first row, entities absent from the
-    right side, NULL entities and integer-µs tolerance edges."""
+    asof_join in all three directions and asof_join_packed (backward)
+    under both joins Spark picks for it (broadcast hash by default,
+    sort-merge with broadcasting off), over nullable values, duplicate
+    and exactly-tied right timestamps, anchors before an entity's first
+    row, entities absent from the right side, NULL entities and
+    integer-µs tolerance edges."""
     from functools import partial
 
-    from feature_engineering_tk_spark.operators.asof import (
-        asof_join,
-        asof_join_broadcast,
-        asof_join_packed,
-    )
+    from feature_engineering_tk_spark.operators.asof import asof_join, asof_join_packed
 
     def ts(off):
         return pd.to_datetime([_ASOF_BASE_US + o for o in off], unit="us")
@@ -267,17 +264,22 @@ def test_asof_join_matches_pandas_merge_asof(spark, left, right, tol_us):
         )
         for d in ("backward", "forward", "nearest")
     }
-    runs["asof_join_packed"] = (
-        "backward", tol_us, partial(asof_join_packed, tolerance_seconds=tol_s)
-    )
-    runs["asof_join_broadcast"] = ("backward", None, asof_join_broadcast)
+    packed = partial(asof_join_packed, tolerance_seconds=tol_s)
+    runs["asof_join_packed[broadcast]"] = ("backward", tol_us, packed)
+    runs["asof_join_packed[sort-merge]"] = ("backward", tol_us, packed)
 
     def norm(xs):
         return [None if pd.isna(x) else x for x in xs]
 
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(key)
     for name, (direction, tol, fn) in runs.items():
-        got = fn(lf, rf, entity="conv_id", value_cols=["v", "s"], suffix="")
-        got = got.orderBy("aid").toPandas()
+        spark.conf.set(key, "-1" if name.endswith("[sort-merge]") else default)
+        try:
+            got = fn(lf, rf, entity="conv_id", value_cols=["v", "s"], suffix="")
+            got = got.orderBy("aid").toPandas()
+        finally:
+            spark.conf.set(key, default)
         exp = _merge_asof_oracle(left_pdf, right_pdf, direction, tol)
         for c in ("v", "s"):
             assert norm(got[c]) == norm(exp[c]), f"{name} {c} (tol_us={tol})"

@@ -427,33 +427,6 @@ def test_dataset_fingerprint_null_and_empty(spark):
         dataset_fingerprint(df, hash_mode="sha9000")
 
 
-def test_feature_job_bucket_output_naming(spark, tmp_path):
-    """--bucket-output sanitizes identifiers (hyphens, dots) and the
-    registered table joins itself on conv_id with zero exchanges."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "jobs"))
-    from feature_engineering_tk_spark.datagen import generate_transcripts
-    from feature_engineering_tk_spark.plans.inspect import inspect
-    from jobs.feature_job import build_pipeline, register_bucketed
-
-    df = generate_transcripts(spark, n_convs=30, seed=7)
-    feat = build_pipeline(str(tmp_path / "ck"), 1800.0).run(spark, df, resume=True)
-    out = str(tmp_path / "feat-v2.x")
-    table = register_bucketed(feat, out, 2)
-    assert table == "feat_v2_x_bucketed"
-    t = spark.table("feat_v2_x_bucketed")
-    assert t.count() > 0
-    j = t.hint("merge").join(
-        t.select("conv_id").distinct().hint("merge"), "conv_id"
-    )
-    plan = inspect(j)
-    # left side scan comes out pre-clustered; only the derived distinct
-    # side may exchange
-    assert len(plan.shuffles) + plan.broadcasts <= 1, plan
-    spark.sql("DROP TABLE IF EXISTS feat_v2_x_bucketed")
-
-
 def test_read_delimited_schema_and_corrupt_capture(spark, tmp_path):
     from feature_engineering_tk_spark.sources import read_delimited
 

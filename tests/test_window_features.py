@@ -431,19 +431,25 @@ def test_rows_since_event_prior_frame(spark):
     assert got[("d", 0)] is None  # never crosses conversations
 
 
-@pytest.mark.parametrize("name", ["_rn", "_ip_pos"])
+@pytest.mark.parametrize("name", ["_rn", "_ip_pos", "_n"])
 def test_window_helpers_keep_a_callers_column(spark, name):
-    """rows_since_event and interpolate_linear add no temp column, so a
-    caller's own column of any name passes through both unchanged."""
+    """rows_since_event and interpolate_linear add no temp column, and
+    remove_duplicates names its own after none of the input's, so a
+    caller's own column of any name passes through all of them
+    unchanged."""
     from pyspark.sql import functions as F
+
+    from feature_engineering_tk_spark.operators.rows import remove_duplicates
 
     df = spark.createDataFrame(
         [("c", i, v, 100 + i) for i, v in enumerate([1.0, None, 3.0, None])],
         "conv_id string, turn_idx int, v double, mine long",
     ).withColumn(name, F.col("mine"))
+    key = ["conv_id", "turn_idx"]
     for out in (
         W.rows_since_event(df, F.col("v").isNotNull()),
         W.interpolate_linear(df, ["v"]),
+        *[remove_duplicates(df, subset=key, keep=k) for k in ("first", "last", False)],
     ):
         assert out.columns[: len(df.columns)] == df.columns
         got = [r[name] for r in out.orderBy("turn_idx").collect()]
