@@ -85,9 +85,7 @@ def main() -> None:
 
     # -- B: whole-group stat on every row (window vs join-back) -------
     win = lambda: group_transform(df, ["conv_id"], "tokens", ["mean", "sum"])  # noqa: E731
-    jb = lambda: group_transform_join(  # noqa: E731
-        df, ["conv_id"], "tokens", ["mean", "sum"], broadcast=False
-    )
+    jb = lambda: group_transform_join(df, ["conv_id"], "tokens", ["mean", "sum"])  # noqa: E731
     wa = win().filter(F.col("conv_id") == "hot").select("conv_id", "tokens_conv_id_mean").first()
     jba = jb().filter(F.col("conv_id") == "hot").select("conv_id", "tokens_conv_id_mean").first()
     assert math.isclose(wa["tokens_conv_id_mean"], jba["tokens_conv_id_mean"], rel_tol=1e-9)
